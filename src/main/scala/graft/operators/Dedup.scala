@@ -180,21 +180,6 @@ object Dedup {
     }
   }
 
-  /** Exact Jaccard similarity between the shingle sets of candidate pairs.
-    * Joins the (small) candidate list back to the shingle arrays and
-    * verifies with set intersection — no UDF.
-    */
-  /** Exact-Jaccard verification of a candidate pair list: returns the
-    * pairs at jaccard ≥ `minJaccard`, PERSISTED and MATERIALIZED (caller
-    * unpersists). Exchange discipline: the wide shingle-hash arrays never
-    * ride a hash shuffle AND the corpus/index frame is scanned exactly
-    * ONCE — the union-ids prune lands in a persisted candidate-id-bounded
-    * frame, and both per-side broadcasts build from that cache (the
-    * per-side-prune form scanned the corpus once per side; an
-    * exploded-pair-sides form shuffles one array per pair SIDE, which
-    * loses badly whenever pairs ≫ distinct candidate ids — the capped
-    * mega-bucket regime). Per-side broadcast bytes stay id-bounded.
-    */
   /** Broadcast gate for exploded pair SIDES (2 scalar rows per candidate
     * pair): the side list is PAIR-COUNT-sized, not batch-sized. Gating it
     * on batch/donor rows let the r14 100× real-mode rehearsal collect a
@@ -209,6 +194,13 @@ object Dedup {
       cands: DataFrame, broadcastRowLimit: Long): Boolean =
     2L * cands.count() <= broadcastRowLimit
 
+  /** Exact-Jaccard verification of a candidate pair list: returns the
+    * pairs (a, b, jaccard) at jaccard ≥ `minJaccard`, PERSISTED and
+    * MATERIALIZED (caller unpersists). The wide shingle-hash arrays
+    * never ride a hash shuffle and the corpus/index frame is scanned
+    * exactly once: the exploded pair sides ([[pairSides]]) probe the
+    * scan and each pair re-assembles in a pair-bounded aggregate.
+    */
   def verifyJaccard(
       candidates: DataFrame, shingled: DataFrame, idCol: String,
       shCol: String, minJaccard: Double,
@@ -245,6 +237,37 @@ object Dedup {
       .withColumn("uni", size(array_union(col("sh_a"), col("sh_b"))).cast("double"))
       .select(col("a"), col("b"), (col("inter") / col("uni")).as("jaccard"))
       .filter(col("jaccard") >= minJaccard)
+      .persist()
+    out.count() // persisted + materialized; caller unpersists
+    out
+  }
+
+  /** Exact-hamming verification of SimHash candidate pairs against an
+    * (id, sig) signature table: returns (a, b, hamming) at hamming ≤
+    * `maxHamming`, PERSISTED and MATERIALIZED (caller unpersists). The
+    * [[verifyJaccard]] shape: the exploded pair sides probe ONE scan of
+    * the signature log and the two signatures re-pair in a pair-bounded
+    * aggregate. `broadcastSides` is the caller's
+    * [[sidesBroadcastable]] verdict — above the gate the sides take a
+    * plain id shuffle join (the r14 100× SimHash shard bootstrap died
+    * building this broadcast: >1 GiB of serialized results vs the 1 GiB
+    * driver default).
+    */
+  private[operators] def verifyHamming(
+      candidates: DataFrame, sigs: DataFrame, maxHamming: Int,
+      broadcastSides: Boolean): DataFrame = {
+    val hint: DataFrame => DataFrame =
+      if (broadcastSides) df => broadcast(df) else identity
+    val out = sigs.select(col("id"), col("sig"))
+      .join(hint(pairSides(candidates)), "id")
+      .groupBy("a", "b")
+      .agg(
+        first(when(col("isA"), col("sig")), ignoreNulls = true).as("siga"),
+        first(when(!col("isA"), col("sig")), ignoreNulls = true).as("sigb"))
+      .filter(col("siga").isNotNull && col("sigb").isNotNull)
+      .select(col("a"), col("b"),
+        bit_count(col("siga").bitwiseXOR(col("sigb"))).cast("int").as("hamming"))
+      .filter(col("hamming") <= maxHamming)
       .persist()
     out.count() // persisted + materialized; caller unpersists
     out

@@ -124,30 +124,34 @@ object IncrementalIndex {
     * supersets that exact verification filters, which is what the
     * d54/e21 oracle equality gates; under ENGAGED caps the preserved
     * invariant is connectivity (IncrementalIndexSpec pins it).
-    */
-  /** `crossOnly` (the binary shard merges): emit ONLY index×batch
-    * pairs, skipping the batch self-join outright. When the batch is a
-    * whole donor index, its internal pairs are already in the donor's
-    * own pair log — generating them to drop them later costs a second
-    * index-sized self-join, the dominant term of a merge at scale.
     *
-    * `batchSharded` (the N-way merge): the batch side carries an `sh`
-    * shard tag (donors 1..k; the index side is implicitly tag 0), and
-    * batch×batch pairs are emitted only ACROSS different tags — the
-    * intra-shard pairs already sit in each shard's own pair log, and
-    * filtering inside the join beats generating them, running them
-    * through the distinct, and probing shard membership afterwards.
+    * `donors` says what the batch side is, and so which batch×batch
+    * pairs are wanted:
+    *
+    *  - 0 (an ingest): the batch is new documents, and every
+    *    batch-internal pair is emitted;
+    *  - 1 (a one-donor merge): the batch is a whole donor index whose
+    *    internal pairs already sit in its own pair log, so only
+    *    index×batch pairs are emitted and the batch self-join — an
+    *    index-sized join, the dominant merge term at scale — is never
+    *    planned. The banded rows carry a constant `sh` tag, persisted
+    *    after tagging, so the optimizer could not fold a cross-tag
+    *    filter to false: skipping the join must be explicit;
+    *  - k ≥ 2 (an N-way merge): the batch side carries an `sh` shard tag
+    *    (donors 1..k; the index side is implicitly tag 0), and batch×batch
+    *    pairs are emitted only ACROSS different tags — the intra-shard
+    *    pairs already sit in each shard's own pair log, and filtering
+    *    inside the join beats generating them, running them through the
+    *    distinct, and probing shard membership afterwards.
     */
   private def incrementalBucketCandidates(
       bandedI: DataFrame, bandedB: DataFrame, bucketCap: Int,
       over: Option[DataFrame], batchRows: Long,
-      broadcastRowLimit: Long = DefaultBroadcastRowLimit,
-      crossOnly: Boolean = false,
-      batchSharded: Boolean = false): DataFrame = {
+      broadcastRowLimit: Long, donors: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(bucketCap > 0, s"bucketCap must be positive, got $bucketCap")
-    require(!(crossOnly && batchSharded),
-      "crossOnly (binary merge) and batchSharded (N-way merge) are exclusive")
+    require(donors < 2 || bandedB.columns.contains("sh"),
+      s"an N-way merge of $donors donors needs `sh` shard tags on the batch side")
     // `over` arrives as an already-materialized LOCAL relation (see
     // [[overCapAndBatchRows]]) or None. In the None case — the common one —
     // the over-cap split joins never enter the plan at all: both sides
@@ -178,17 +182,18 @@ object IncrementalIndex {
         greatest(col("i.doc"), col("b.doc")).as("b"))
     def bbPairs = {
       val crossShard =
-        if (batchSharded) col("l.sh") =!= col("r.sh") else lit(true)
+        if (donors > 1) col("l.sh") =!= col("r.sh") else lit(true)
       normalB.as("l").join(hintB(normalB.as("r")),
           col("l.band") === col("r.band") && col("l.bucket") === col("r.bucket") &&
             col("l.doc") < col("r.doc") && crossShard)
         .select(col("l.doc").as("a"), col("r.doc").as("b"))
     }
-    val subCap = if (crossOnly) biPairs else biPairs.unionAll(bbPairs)
+    val subCap = if (donors == 1) biPairs else biPairs.unionAll(bbPairs)
     if (!anyOver) return subCap.distinct()
     // over-cap buckets: rank-chunk over index∪batch members (same scheme
     // as the one-shot caps), only batch-touching pairs emitted
-    val bigB1 = if (batchSharded) bigB else bigB.withColumn("sh", lit(1))
+    val bigB1 =
+      if (bigB.columns.contains("sh")) bigB else bigB.withColumn("sh", lit(1))
     val big = bigI.withColumn("sh", lit(0))
       .unionAll(bigB1.select(bigI.columns.map(col) :+ col("sh"): _*))
       .withColumn("chunk", floor(
@@ -201,7 +206,7 @@ object IncrementalIndex {
     val bigPairs = keyed("l").join(keyed("r"), Seq("band", "bucket", "k"))
       .filter(col("k") === greatest(col("l_c"), col("r_c")) &&
         col("l_doc") < col("r_doc"))
-      .filter(if (crossOnly || batchSharded) col("l_sh") =!= col("r_sh")
+      .filter(if (donors > 0) col("l_sh") =!= col("r_sh")
         else col("l_sh") =!= lit(0) || col("r_sh") =!= lit(0))
       .select(col("l_doc").as("a"), col("r_doc").as("b"))
     subCap.unionAll(bigPairs).distinct()
@@ -217,21 +222,6 @@ object IncrementalIndex {
   private def bucketStats(banded: DataFrame): DataFrame =
     banded.groupBy("band", "bucket").agg(count(lit(1)).as("n"))
 
-  /** Over-cap (band, bucket) list from maintained stats + this batch.
-    * `excludeEpoch` (the `*Epoch` ingests pass their epoch id) pins the
-    * maintained side to the PRE-epoch version set: a replay whose first
-    * attempt crashed after the stats leg would otherwise read its own
-    * batch's delta from the log AND add `batchStats` again. The double
-    * count spuriously engages caps (occupancy inflated by one batch
-    * delta) — bounded-lossless for the replay itself (a spuriously
-    * engaged bucket holds ≤ cap actual rows, one rank-chunk, all pairs
-    * still emitted) but PERMANENT without the guard: an unguarded
-    * re-commit would leave the inflated delta in the log forever, every
-    * future probe of the lineage over-engages, and compaction bakes the
-    * inflation into the checkpoint. The guarded stats leg
-    * ([[commitEpoch]]) plus this pin make the replay's artifacts AND the
-    * accumulated stats log identical to a no-crash run.
-    */
   /** The over-cap (band, bucket) list AND the batch's banded row total in
     * ONE job: a grouping-sets aggregate over (maintained stats ∪ batch
     * delta) emits the per-bucket occupancy rows plus one global row whose
@@ -245,6 +235,20 @@ object IncrementalIndex {
     * aggregate (the old `isEmpty` probe + the broadcast's own recompute)
     * with one. None (the common case) lets candidate generation skip the
     * over-cap split joins entirely.
+    *
+    * `excludeEpoch` (the `*Epoch` ingests and merges pass their epoch id)
+    * pins the maintained side to the PRE-epoch version set: a replay
+    * whose first attempt crashed after the stats leg would otherwise read
+    * its own batch's delta from the log AND add `batchStats` again. The
+    * double count spuriously engages caps (occupancy inflated by one
+    * batch delta) — bounded-lossless for the replay itself (a spuriously
+    * engaged bucket holds ≤ cap actual rows, one rank-chunk, all pairs
+    * still emitted) but PERMANENT without the guard: an unguarded
+    * re-commit would leave the inflated delta in the log forever, every
+    * future probe of the lineage over-engages, and compaction bakes the
+    * inflation into the checkpoint. The guarded stats leg
+    * ([[commitEpoch]]) plus this pin make the replay's artifacts AND the
+    * accumulated stats log identical to a no-crash run.
     */
   private def overCapAndBatchRows(spark: SparkSession, statsRoot: String,
       batchStats: DataFrame, bucketCap: Int,
@@ -334,78 +338,106 @@ object IncrementalIndex {
     * minus any retracted ids ([[retract]]).
     */
   def readMinHashIndex(spark: SparkSession, root: String,
-      upTo: Option[Long] = None): DataFrame =
-    applyTombstones(spark, root,
-      VersionedTable.readAllVersions(spark, root, upTo))
+      upTo: Option[Long] = None): DataFrame = readSigLog(spark, root, upTo)
 
-  /** Ingest one batch: compute ITS signatures, find the verified near-dup
-    * pairs this batch adds (batch-internal + batch×index, never
-    * index×index), append the batch's signatures as the next index
-    * version. Returns (committed version, new verified pairs (a, b,
-    * jaccard) with a < b) — the pairs frame is persisted and materialized;
-    * the caller owns the unpersist. An empty index root bootstraps
-    * naturally (the first ingest's pairs are its internal ones).
+  // ------------------------------------------- banded signature families
+
+  /** One banded signature family — MinHash, SimHash (text signatures and
+    * precomputed image hashes) or SRP. The families share one ingest,
+    * probe, merge and purge spine ([[batchArtifacts]], [[ingestSigs]],
+    * [[mergeShards]], [[purgeSigIndex]]) and differ only in these fields:
+    *
+    *  - `band`: stored signature rows → (doc, rk, band, bucket), a
+    *    map-only derivation that reads just the family's narrow slice
+    *    (id, rank column, signature) — never the wide verify payload;
+    *  - `payload`: the stored column verification reads per candidate
+    *    side (`hs` shingle-hash sets, `sig` signatures or `v` vectors);
+    *  - `verify`: (candidates, (id, payload) rows, broadcast sides?) →
+    *    verified pairs, persisted and materialized — the side broadcast
+    *    is gated on the candidate count ([[Dedup.sidesBroadcastable]]).
+    *
+    * Every family keeps its signature log at the index root and its
+    * occupancy deltas at `bucketstats`.
     */
-  /** The compute half of a MinHash ingest: (persisted batch signatures,
-    * batch stats delta, persisted verified pairs) with nothing written.
-    * The caller commits and then calls `release()` (the verified frame
-    * stays persisted for the caller to consume and unpersist).
+  private final case class SigFamily(
+      band: DataFrame => DataFrame, payload: String,
+      verify: (DataFrame, DataFrame, Boolean) => DataFrame,
+      bucketCap: Int, broadcastRowLimit: Long)
+
+  private def minHashFamily(p: MinHashParams) = SigFamily(
+    bandedOf(_, p.numHashes, p.bands), "hs",
+    (cands, hs, bc) => Dedup.verifyJaccard(cands, hs, "id", "hs", p.threshold, bc),
+    p.bucketCap, p.broadcastRowLimit)
+
+  private def simHashFamily(maxHamming: Int, bucketCap: Int,
+      broadcastRowLimit: Long) = SigFamily(
+    bandedOfSimHash, "sig",
+    (cands, sigs, bc) => Dedup.verifyHamming(cands, sigs, maxHamming, bc),
+    bucketCap, broadcastRowLimit)
+
+  private def srpFamily(p: SrpParams) = SigFamily(
+    bandedOfSrp, "v",
+    (cands, vecs, bc) => Dedup.verifyCosine(cands, vecs, p.threshold, broadcastSides = bc),
+    p.bucketCap, p.broadcastRowLimit)
+
+  private def statsRootOf(root: String) = subRoot(root, "bucketstats")
+
+  /** A family's stored signature rows, minus retracted ids. */
+  private def readSigLog(spark: SparkSession, root: String,
+      upTo: Option[Long] = None): DataFrame =
+    applyTombstones(spark, root, VersionedTable.readAllVersions(spark, root, upTo))
+
+  /** The compute half of an ingest: (persisted batch signatures, batch
+    * stats delta, persisted verified pairs) with nothing written. The
+    * caller commits and then calls `release()` (the verified frame stays
+    * persisted for the caller to consume and unpersist).
     */
-  private final case class MinHashArtifacts(
+  private final case class BatchArtifacts(
       batchSigs: DataFrame, batchStats: DataFrame, verified: DataFrame,
       release: () => Unit)
 
-  private def minHashBatchArtifacts(spark: SparkSession, root: String,
-      batch: DataFrame, idCol: String, textCol: String,
-      p: MinHashParams, excludeEpoch: Option[Long] = None): MinHashArtifacts = {
-    val batchSigs = minHashSignatures(batch, idCol, textCol, p).persist()
+  /** The artifacts of one batch of stored rows `sigs` (the family's
+    * signing step applied, still lazy): the verified pairs the batch adds — batch-internal + batch×index, never index×index —
+    * with the index streaming map-side under the broadcast gate
+    * ([[incrementalBucketCandidates]]) and verification reading the
+    * STORED payload of candidate members only.
+    */
+  private def batchArtifacts(spark: SparkSession, root: String,
+      sigs: DataFrame, f: SigFamily,
+      excludeEpoch: Option[Long] = None): BatchArtifacts = {
+    val batchSigs = sigs.persist()
     try {
-      val haveIndex = VersionedTable.versions(spark, root).nonEmpty
       val prior =
-        if (haveIndex) Some(readMinHashIndex(spark, root)) else None
+        if (VersionedTable.versions(spark, root).nonEmpty) Some(readSigLog(spark, root))
+        else None
       // banded batch rows feed several joins (broadcast probes + the
       // stats delta) — persist them so the signature kernel runs once;
       // the INDEX side is a map-only derivation over its parquet scan
       // and never enters an exchange (see incrementalBucketCandidates)
-      val bandedB = bandedOf(
-        batchSigs.select("id", "sz", "sig"), p.numHashes, p.bands).persist()
+      val bandedB = f.band(batchSigs).persist()
       // persisted: the stats delta executes TWICE per ingest otherwise —
       // once inside the over-cap collect job, once re-aggregated from the
       // banded cache by the sidecar write (JobProfile d56: the write job
       // re-ran the full hash aggregate). Bucket-bounded, released with
       // the banded cache.
       val batchStats = bucketStats(bandedB).persist()
-      val statsRoot = subRoot(root, "bucketstats")
       // one job: materializes the banded cache, collects the over-cap
       // list AND the broadcast-gate row count (see overCapAndBatchRows)
-      val (over, batchRows) = overCapAndBatchRows(spark, statsRoot,
-        batchStats, p.bucketCap, excludeEpoch)
-      val cands = (prior match {
-        case Some(ix) => incrementalBucketCandidates(
-          bandedOf(ix.select(col("id"), col("sz"), col("sig")), p.numHashes, p.bands),
-          bandedB, p.bucketCap, over, batchRows, p.broadcastRowLimit)
-        case None =>
-          // bootstrap: the batch IS the corpus — over the row limit the
-          // gate drops the broadcast hint and this becomes the genuine
-          // one-shot shuffle shape (empty index side + banded self-join)
-          incrementalBucketCandidates(
-            bandedB.filter(lit(false)), bandedB, p.bucketCap, over,
-            batchRows, p.broadcastRowLimit)
-      }).persist()
+      val (over, batchRows) = overCapAndBatchRows(spark, statsRootOf(root),
+        batchStats, f.bucketCap, excludeEpoch)
+      // bootstrap (no index yet): the batch IS the corpus — over the row
+      // limit the gate drops the broadcast hint and this becomes the
+      // genuine one-shot shuffle shape (empty index side + banded self-join)
+      val cands = incrementalBucketCandidates(
+        prior.map(f.band).getOrElse(bandedB.filter(lit(false))), bandedB,
+        f.bucketCap, over, batchRows, f.broadcastRowLimit, donors = 0).persist()
       try {
-        // verification shingle sets: stored for index rows, fresh for the
-        // batch; verifyJaccard prunes to candidate ids via broadcast
-        // before any wide array moves
-        val shingled = prior match {
-          case Some(ix) => ix.select(col("id"), col("hs"))
-            .unionAll(batchSigs.select("id", "hs"))
-          case None => batchSigs.select("id", "hs")
-        }
-        // persisted + materialized inside, while the caches are hot
-        val verified = Dedup.verifyJaccard(cands, shingled, "id", "hs",
-          p.threshold,
-          broadcastSides = Dedup.sidesBroadcastable(cands, p.broadcastRowLimit))
-        MinHashArtifacts(batchSigs, batchStats, verified, () => {
+        // verification payload: stored for index rows, fresh for the batch
+        val payload = (prior.toSeq :+ batchSigs)
+          .map(_.select(col("id"), col(f.payload))).reduce(_.unionAll(_))
+        val verified = f.verify(cands, payload,
+          Dedup.sidesBroadcastable(cands, f.broadcastRowLimit))
+        BatchArtifacts(batchSigs, batchStats, verified, () => {
           batchStats.unpersist(blocking = false)
           bandedB.unpersist(blocking = false)
           batchSigs.unpersist(blocking = false)
@@ -416,25 +448,169 @@ object IncrementalIndex {
     }
   }
 
-  def ingestMinHash(spark: SparkSession, root: String, batch: DataFrame,
-      idCol: String, textCol: String,
-      p: MinHashParams = MinHashParams()): (Long, DataFrame) = {
-    val a = minHashBatchArtifacts(spark, root, batch, idCol, textCol, p)
+  /** The one commit step of every family's plain and `*Epoch` ingest.
+    * Plain (`epoch` None): the stats delta commits FIRST — a crash
+    * between the two writes then leaves occupancy OVERCOUNTING the lost
+    * batch (conservative: at worst extra buckets take the capped path)
+    * instead of undercounting (a missed cap engagement) — then the
+    * signatures. Epoch (`Some((id, pairsRoot))`): a replayed epoch drops
+    * (None) before anything is computed; otherwise [[commitEpoch]] with
+    * the stats as guarded leg 0, then pairs, then signatures as the
+    * replay key (crash windows at [[ingestMinHashEpoch]]). When
+    * `autoCompactEvery` fires it checkpoints UP TO the new version and
+    * vacuums it, so the checkpoint is handed back instead — the returned
+    * version is always pin-readable. Returns (version, verified pairs).
+    */
+  private def ingestSigs(spark: SparkSession, root: String, sigs: DataFrame,
+      f: SigFamily, epoch: Option[(Long, String)],
+      autoCompactEvery: Int = 0): Option[(Long, DataFrame)] = {
+    if (epoch.exists { case (e, _) => epochCommittedIn(spark, root, e) })
+      return None
+    val a = batchArtifacts(spark, root, sigs, f, epoch.map(_._1))
     try {
-      // stats commit FIRST: a crash between the two writes then leaves
-      // occupancy OVERCOUNTING the lost batch (conservative — at worst
-      // extra buckets take the capped path) instead of undercounting
-      // (a missed cap engagement)
-      VersionedTable.write(spark, a.batchStats, subRoot(root, "bucketstats"))
-      val v = VersionedTable.write(spark, a.batchSigs, root)
-      // if auto-compaction fires it checkpoints UP TO v and vacuums it —
-      // hand back the checkpoint instead so the returned version is
-      // always pin-readable (VersionedTable.read(root, Some(_)))
-      val fired = autoCompactAt(spark, root, p.autoCompactEvery)(
+      val v = epoch match {
+        case None =>
+          VersionedTable.write(spark, a.batchStats, statsRootOf(root))
+          VersionedTable.write(spark, a.batchSigs, root)
+        case Some((e, pairsRoot)) =>
+          commitEpoch(spark, e, Some((a.batchStats, statsRootOf(root))),
+            Seq(a.verified -> pairsRoot, a.batchSigs -> root))
+      }
+      val fired = autoCompactAt(spark, root, autoCompactEvery)(
         compactDedupIndex(spark, root))
-      (if (fired) VersionedTable.versions(spark, root).last else v, a.verified)
+      Some((if (fired) VersionedTable.versions(spark, root).last else v, a.verified))
+    } catch {
+      case t: Throwable => a.verified.unpersist(blocking = false); throw t
     } finally a.release()
   }
+
+  /** The one shard-merge spine of the banded families: merge the
+    * INDEPENDENTLY-BOOTSTRAPPED indexes at `donorRoots` into `root` in
+    * ONE candidate pass, with the union of the donors playing the batch
+    * role. Each donor's banded rows carry its shard tag (i+1; the
+    * adopter is tag 0), and [[incrementalBucketCandidates]] emits only
+    * pairs whose sides live in different shards — shard-internal pairs
+    * are in the shards' own logs, so emitting them again would double the
+    * union, and because ids are disjoint across shards every candidate
+    * is cross-shard by construction (no membership probe). A binary merge
+    * is this merge with one donor: the donor self-join is never planned,
+    * so the one-donor plan is the binary merge's plan (PlanSpec pins it).
+    * A fold of binary merges would pay N−1 candidate passes, each
+    * re-scanning the GROWING adopter — the quadratic tail that kills a
+    * wide fan-in; one pass finds the donor×donor pairs a fold only
+    * discovers across iterations.
+    *
+    * No full-width log is cached: banding reads the narrow signature
+    * slice and verification a candidate-pruned (id, payload) slice, both
+    * column-pruned parquet scans. Cap engagement uses the adopter's
+    * maintained stats plus the union-donor delta — exactly what a
+    * one-shot build over the union would see, so the connectivity
+    * invariant under engaged caps carries over. The data move is log
+    * adoption ([[adoptDonors]]). Returns (last committed version,
+    * verified cross-shard pairs), or None for a replayed epoch. All
+    * shards must share the family's params; ids must be disjoint.
+    */
+  private def mergeShards(spark: SparkSession, root: String,
+      donorRoots: Seq[String], f: SigFamily,
+      epoch: Option[(Long, String)]): Option[(Long, DataFrame)] = {
+    require(donorRoots.nonEmpty, "a shard merge needs donors")
+    if (epoch.exists { case (e, _) => epochCommittedIn(spark, root, e) })
+      return None
+    val donors = donorRoots.map(readSigLog(spark, _))
+    val index = readSigLog(spark, root)
+    val bandedD = donors.zipWithIndex.map { case (d, i) =>
+      f.band(d).withColumn("sh", lit(i + 1))
+    }.reduce(_.unionAll(_)).persist()
+    try {
+      // one job: materializes, collects over-cap list + gate row count
+      val (over, donorRows) = overCapAndBatchRows(spark, statsRootOf(root),
+        bucketStats(bandedD), f.bucketCap, epoch.map(_._1))
+      val cands = incrementalBucketCandidates(f.band(index), bandedD,
+        f.bucketCap, over, donorRows, f.broadcastRowLimit,
+        donors = donorRoots.size).persist()
+      try {
+        val payload = (index +: donors)
+          .map(_.select(col("id"), col(f.payload))).reduce(_.unionAll(_))
+        val verified = f.verify(cands, payload,
+          Dedup.sidesBroadcastable(cands, f.broadcastRowLimit))
+        val v = adoptDonors(spark, root, donorRoots, Seq(statsRootOf),
+          identity, verified, epoch)
+        Some((v, verified))
+      } finally cands.unpersist(blocking = false)
+    } finally bandedD.unpersist(blocking = false)
+  }
+
+  /** LOG ADOPTION, the data move of every adopting shard merge: the
+    * donors' version files are immutable parquet, so they commit into
+    * `root`'s logs as BYTE-LEVEL COPIES ([[VersionedTable.adoptFiles]] —
+    * no decode, no re-encode, no Spark job). Raw donor files include any
+    * retracted rows, so the donors' tombstones adopt FIRST (an unmatched
+    * tombstone is a harmless no-op), then each `sidecars` log (a
+    * stats-only crash merely overcounts occupancy), then — under an
+    * epoch — the merge's `out` frame into the caller's log, and LAST the
+    * `data` log: the visibility point every read unions and the epoch's
+    * replay key. No data row is visible before the tombstones and stats
+    * that govern it. Logs are named by the function that maps an index
+    * root to them, applied to `root` and to every donor root.
+    *
+    * Under an epoch each leg adopts ALL donors' files in ONE guarded
+    * version, so a leg is atomic — there is no "three of eight donors
+    * adopted" window: the leg either committed for every donor or none,
+    * and a replay that finds a prefix of the legs commits exactly the
+    * missing suffix ([[adoptEpochLeg]]). Returns the data log's version.
+    */
+  private def adoptDonors(spark: SparkSession, root: String,
+      donorRoots: Seq[String], sidecars: Seq[String => String],
+      data: String => String, out: DataFrame,
+      epoch: Option[(Long, String)]): Long = {
+    def adopt(log: String => String, dirs: Seq[org.apache.hadoop.fs.Path]) =
+      epoch match {
+        case None => VersionedTable.adoptFiles(spark, log(root), dirs)
+        case Some((e, _)) => adoptEpochLeg(spark, log(root), dirs, e)
+      }
+    def dirsOf(log: String => String) = donorRoots.flatMap(dr =>
+      VersionedTable.liveVersionDirs(spark, log(dr)))
+    val tombs = dirsOf(tombstonesRoot)
+    if (tombs.nonEmpty) adopt(tombstonesRoot, tombs)
+    sidecars.foreach(log => adopt(log, dirsOf(log)))
+    epoch.foreach { case (e, outRoot) => writeEpochLeg(spark, out, outRoot, e) }
+    adopt(data, dirsOf(data))
+  }
+
+  /** Purge a banded-family index: checkpoint the surviving signature
+    * rows, re-derive the `bucketstats` sidecar EXACTLY from them (one
+    * map-only banding pass + a bucket-bounded aggregate — the occupancy
+    * overcount retraction left behind disappears), then clear the
+    * tombstones. Crash-safe in that order: signatures first (tombstones
+    * still filter), stats next (overcounting until then — conservative),
+    * tombstones last.
+    */
+  private def purgeSigIndex(spark: SparkSession, root: String,
+      band: DataFrame => DataFrame): Unit = {
+    purgeLog(spark, root, root)
+    val statsRoot = statsRootOf(root)
+    VersionedTable.writeCheckpoint(spark,
+      bucketStats(band(VersionedTable.readAllVersions(spark, root))),
+      statsRoot, VersionedTable.versions(spark, statsRoot).last)
+    VersionedTable.vacuumCovered(spark, statsRoot)
+    clearTombstones(spark, root)
+  }
+
+  // ------------------------------------------------------------- MinHash
+
+  /** Ingest one batch: compute ITS signatures, find the verified near-dup
+    * pairs this batch adds (batch-internal + batch×index, never
+    * index×index), append the batch's signatures as the next index
+    * version. Returns (committed version, new verified pairs (a, b,
+    * jaccard) with a < b) — the pairs frame is persisted and materialized;
+    * the caller owns the unpersist. An empty index root bootstraps
+    * naturally (the first ingest's pairs are its internal ones).
+    */
+  def ingestMinHash(spark: SparkSession, root: String, batch: DataFrame,
+      idCol: String, textCol: String,
+      p: MinHashParams = MinHashParams()): (Long, DataFrame) =
+    ingestSigs(spark, root, minHashSignatures(batch, idCol, textCol, p),
+      minHashFamily(p), None, p.autoCompactEvery).get
 
   /** Read-only near-dup PROBE: exactly what [[ingestMinHash]] WOULD
     * emit for this batch — verified batch-internal + batch×index pairs
@@ -452,7 +628,8 @@ object IncrementalIndex {
   def probeMinHash(spark: SparkSession, root: String, batch: DataFrame,
       idCol: String, textCol: String,
       p: MinHashParams = MinHashParams()): DataFrame = {
-    val a = minHashBatchArtifacts(spark, root, batch, idCol, textCol, p)
+    val a = batchArtifacts(spark, root,
+      minHashSignatures(batch, idCol, textCol, p), minHashFamily(p))
     a.release()
     a.verified
   }
@@ -492,21 +669,9 @@ object IncrementalIndex {
     */
   def ingestMinHashEpoch(spark: SparkSession, root: String,
       pairsRoot: String, batch: DataFrame, idCol: String, textCol: String,
-      epochId: Long, p: MinHashParams = MinHashParams()): Option[DataFrame] = {
-    if (epochCommittedIn(spark, root, epochId)) return None
-    val a = minHashBatchArtifacts(spark, root, batch, idCol, textCol, p,
-      excludeEpoch = Some(epochId))
-    try {
-      commitEpoch(spark, epochId,
-        Some((a.batchStats, subRoot(root, "bucketstats"))),
-        Seq(a.verified -> pairsRoot, a.batchSigs -> root))
-      autoCompactAt(spark, root, p.autoCompactEvery)(
-        compactDedupIndex(spark, root))
-      Some(a.verified)
-    } catch {
-      case t: Throwable => a.verified.unpersist(blocking = false); throw t
-    } finally a.release()
-  }
+      epochId: Long, p: MinHashParams = MinHashParams()): Option[DataFrame] =
+    ingestSigs(spark, root, minHashSignatures(batch, idCol, textCol, p),
+      minHashFamily(p), Some((epochId, pairsRoot)), p.autoCompactEvery).map(_._2)
 
   /** Merge an INDEPENDENTLY-BOOTSTRAPPED MinHash index (`donorRoot`)
     * into `root` — the shard-parallel bootstrap path at corpus scale:
@@ -517,35 +682,27 @@ object IncrementalIndex {
     * alone — signatures and shingle-hash sets read from both indexes'
     * versioned tables, no document text ever re-read or re-signed.
     *
-    * Returns (committed version, verified CROSS pairs) — pairs with one
-    * side in `root` and one in `donorRoot`; each shard's internal pairs
-    * are already in its own pair log, so emitting them again would
-    * double the union. The data move is LOG ADOPTION, not a rewrite:
-    * the donor's signature, stats and tombstone version files are
-    * immutable parquet, so they commit into `root`'s logs as BYTE-LEVEL
-    * COPIES (`VersionedTable.adoptFiles` — no decode/re-encode, no
-    * Spark job; at object-store scale a server-side copy). Donor
-    * tombstones travel too, so retracted donor docs stay retracted in
-    * the merged index, and the donor's own stats deltas keep the
-    * occupancy convention (retractions never decrement — conservative).
+    * The N-way merge with one donor ([[mergeShards]]). Returns
+    * (committed version, verified CROSS pairs) — pairs with one side in
+    * `root` and one in `donorRoot`; each shard's internal pairs are
+    * already in its own pair log, and the donor self-join that would
+    * regenerate them never runs. Donor tombstones travel with the
+    * adopted files, so retracted donor docs stay retracted in the merged
+    * index, and the donor's own stats deltas keep the occupancy
+    * convention (retractions never decrement — conservative).
     * Accumulated pairs (root log ∪ donor log ∪ cross) equal the
     * one-shot pipeline over the union — the d54 disjoint-union theorem
     * with the donor playing the batch role, and banding collisions are
     * identical either way because signatures are pure per-row functions
     * of text under the SHARED params (both shards MUST be built with
-    * the same `p`; ids must be disjoint). Exchange discipline is the
-    * ingest path's with one merge-specific cut: candidate generation
-    * runs `crossOnly` — the donor self-join (a second index-sized join,
-    * the dominant merge term at scale) never executes, every candidate
-    * is index×donor by construction (disjoint ids), and verification
-    * broadcasts only candidate-bounded frames over map-side scans. The
-    * d64 gate pins the equality; the merged index ingests onward
-    * exactly like a one-shot-built one (IncrementalIndexSpec).
+    * the same `p`; ids must be disjoint). The d64 gate pins the
+    * equality; the merged index ingests onward exactly like a
+    * one-shot-built one (IncrementalIndexSpec).
     */
   def mergeMinHashIndexes(spark: SparkSession, root: String,
       donorRoot: String,
       p: MinHashParams = MinHashParams()): (Long, DataFrame) =
-    mergeMinHashImpl(spark, root, donorRoot, p, None).get
+    mergeManyMinHashIndexes(spark, root, Seq(donorRoot), p)
 
   /** Exactly-once shard merge — [[mergeMinHashIndexes]] under the epoch
     * protocol, for orchestrators that may re-deliver a merge step (a
@@ -572,211 +729,36 @@ object IncrementalIndex {
   def mergeMinHashIndexesEpoch(spark: SparkSession, root: String,
       pairsRoot: String, donorRoot: String, epochId: Long,
       p: MinHashParams = MinHashParams()): Option[(Long, DataFrame)] =
-    mergeMinHashImpl(spark, root, donorRoot, p, Some((epochId, pairsRoot)))
-
-  private def mergeMinHashImpl(spark: SparkSession, root: String,
-      donorRoot: String, p: MinHashParams,
-      epoch: Option[(Long, String)]): Option[(Long, DataFrame)] = {
-    if (epoch.exists { case (e, _) => epochCommittedIn(spark, root, e) })
-      return None
-    // never cache the full-width logs: `hs` (the per-doc shingle-hash
-    // set) dominates the row, and every consumer below needs either the
-    // narrow (id, sz, sig) banding slice or a candidate-pruned (id, hs)
-    // slice — column-pruned parquet scans beat materializing the wide
-    // arrays into executor memory at index scale
-    val donor = readMinHashIndex(spark, donorRoot)
-    val index = readMinHashIndex(spark, root)
-    val bandedD = bandedOf(
-      donor.select("id", "sz", "sig"), p.numHashes, p.bands).persist()
-    try {
-      val donorStats = bucketStats(bandedD)
-      val statsRoot = subRoot(root, "bucketstats")
-      // one job: materializes, collects over-cap list + gate row count
-      val (over, donorRows) = overCapAndBatchRows(spark, statsRoot,
-        donorStats, p.bucketCap, epoch.map(_._1))
-      // crossOnly: donor-internal candidates never generate — the donor
-      // self-join (a second index-sized join, the dominant merge term at
-      // scale) is skipped outright, and because shard ids are disjoint
-      // every emitted candidate is index×donor by construction, so no
-      // membership probe is needed either
-      val cands = incrementalBucketCandidates(
-        bandedOf(index.select("id", "sz", "sig"), p.numHashes, p.bands),
-        bandedD, p.bucketCap, over, donorRows, p.broadcastRowLimit,
-        crossOnly = true).persist()
-      try {
-        val shingled = index.select(col("id"), col("hs"))
-          .unionAll(donor.select(col("id"), col("hs")))
-        // persisted + materialized inside, while the caches are hot
-        val verified = Dedup.verifyJaccard(cands, shingled, "id", "hs",
-          p.threshold,
-          broadcastSides = Dedup.sidesBroadcastable(cands, p.broadcastRowLimit))
-        // LOG ADOPTION: the donor's version files are immutable parquet
-        // — commit byte-level copies into root's logs (no decode, no
-        // re-encode, no Spark job; the whole data move is file IO).
-        // Raw donor files include any retracted rows, so the donor's
-        // tombstones adopt FIRST (an unmatched tombstone is a harmless
-        // no-op — the conservative crash order), then its stats deltas
-        // (a stats-only crash merely overcounts occupancy), then the
-        // signature files — the visibility point for future candidates.
-        val donorTombs = VersionedTable.liveVersionDirs(
-          spark, subRoot(donorRoot, "tombstones"))
-        val donorStatsDirs = VersionedTable.liveVersionDirs(
-          spark, subRoot(donorRoot, "bucketstats"))
-        val donorSigDirs = VersionedTable.liveVersionDirs(spark, donorRoot)
-        val v = epoch match {
-          case None =>
-            if (donorTombs.nonEmpty)
-              VersionedTable.adoptFiles(spark, subRoot(root, "tombstones"), donorTombs)
-            VersionedTable.adoptFiles(spark, statsRoot, donorStatsDirs)
-            VersionedTable.adoptFiles(spark, root, donorSigDirs)
-          case Some((e, pairsRoot)) =>
-            if (donorTombs.nonEmpty)
-              adoptEpochLeg(spark, subRoot(root, "tombstones"), donorTombs, e)
-            adoptEpochLeg(spark, statsRoot, donorStatsDirs, e)
-            writeEpochLeg(spark, verified, pairsRoot, e)
-            adoptEpochLeg(spark, root, donorSigDirs, e)
-        }
-        Some((v, verified))
-      } finally cands.unpersist(blocking = false)
-    } finally bandedD.unpersist(blocking = false)
-  }
+    mergeManyMinHashIndexesEpoch(spark, root, pairsRoot, Seq(donorRoot), epochId, p)
 
   /** N-WAY MinHash shard merge — how a 1000-shard bootstrap actually
-    * completes. Folding [[mergeMinHashIndexes]] pairwise costs N−1
-    * candidate passes, each re-scanning the GROWING adopter (the
-    * quadratic tail that kills a wide fan-in); this runs ONE candidate
-    * pass with the union of all donors playing the batch role — the
-    * shared machinery already emits batch-internal candidates, which
-    * here are the donor×donor pairs a fold would only discover across
-    * iterations — and keeps a pair iff its sides live in DIFFERENT
-    * shards (adopter counts as a shard): shard-internal pairs are in
-    * the shards' own logs, so emitting them again would double the
-    * union. Shard membership is resolved the merge's usual way —
-    * candidate-bounded broadcast probes, one map-side scan per shard,
-    * no index-sized shuffle. Cap engagement uses the adopter's
-    * maintained stats plus the union-donor delta: exactly what a
-    * one-shot build over the union would see, so the connectivity
-    * invariant under engaged caps carries over unchanged. Adoption
-    * order across donors preserves the binary merge's conservative
-    * crash ordering GLOBALLY: every donor's tombstones first (an
-    * unmatched tombstone is a no-op), then every stats delta
-    * (overcount-only), then the signature files — no signature is
-    * visible before the tombstones and stats that govern it. Returns
-    * (last committed version, verified cross-shard pairs); accumulated
-    * union (all shard logs ∪ cross) equals the one-shot pipeline over
-    * the union corpus — the d69 gate pins it at three shards. All
-    * shards must share `p`; ids must be disjoint across all of them.
+    * completes: ONE candidate pass over the union of all donors
+    * ([[mergeShards]]), keeping a pair iff its sides live in DIFFERENT
+    * shards (adopter counts as a shard). Returns (last committed
+    * version, verified cross-shard pairs); accumulated union (all shard
+    * logs ∪ cross) equals the one-shot pipeline over the union corpus —
+    * the d69 gate pins it at three shards. All shards must share `p`;
+    * ids must be disjoint across all of them.
     */
   def mergeManyMinHashIndexes(spark: SparkSession, root: String,
       donorRoots: Seq[String],
       p: MinHashParams = MinHashParams()): (Long, DataFrame) =
-    mergeManyMinHashImpl(spark, root, donorRoots, p, None).get
+    mergeShards(spark, root, donorRoots, minHashFamily(p), None).get
 
   /** Exactly-once N-way merge — [[mergeManyMinHashIndexes]] under the
     * epoch protocol (crash-window analysis at
     * [[mergeMinHashIndexesEpoch]]; the orchestrator owns `epochId`).
-    * Adoption granularity differs from the unguarded path on purpose:
-    * each leg adopts ALL donors' files in ONE guarded version, so a leg
-    * is atomic — there is no "three of eight donors adopted" window to
-    * reason about, the leg either committed for every donor or none.
     */
   def mergeManyMinHashIndexesEpoch(spark: SparkSession, root: String,
       pairsRoot: String, donorRoots: Seq[String], epochId: Long,
       p: MinHashParams = MinHashParams()): Option[(Long, DataFrame)] =
-    mergeManyMinHashImpl(spark, root, donorRoots, p, Some((epochId, pairsRoot)))
+    mergeShards(spark, root, donorRoots, minHashFamily(p), Some((epochId, pairsRoot)))
 
-  private def mergeManyMinHashImpl(spark: SparkSession, root: String,
-      donorRoots: Seq[String], p: MinHashParams,
-      epoch: Option[(Long, String)]): Option[(Long, DataFrame)] = {
-    require(donorRoots.nonEmpty, "mergeManyMinHashIndexes needs donors")
-    if (epoch.exists { case (e, _) => epochCommittedIn(spark, root, e) })
-      return None
-    // same discipline as the binary merge: no full-width log caches —
-    // banding reads the narrow (id, sz, sig) slice, verification a
-    // candidate-pruned (id, hs) slice, both column-pruned parquet scans
-    val donors = donorRoots.map(r => readMinHashIndex(spark, r))
-    val donorAll = donors.reduce(_.unionAll(_))
-    val index = readMinHashIndex(spark, root)
-    // each donor's banded rows carry its shard tag (i+1; the adopter is
-    // tag 0 inside the candidate machinery): batchSharded filters
-    // intra-shard pairs INSIDE the candidate join, so they are never
-    // generated, never hit the distinct, and no post-hoc membership
-    // probe per shard is needed — every candidate is cross-shard by
-    // construction (ids are disjoint across shards)
-    val bandedD = donors.zipWithIndex.map { case (d, i) =>
-      bandedOf(d.select("id", "sz", "sig"), p.numHashes, p.bands)
-        .withColumn("sh", lit(i + 1))
-    }.reduce(_.unionAll(_)).persist()
-    try {
-      val donorStats = bucketStats(bandedD)
-      val statsRoot = subRoot(root, "bucketstats")
-      // one job: materializes, collects over-cap list + gate row count
-      val (over, donorRows) = overCapAndBatchRows(spark, statsRoot,
-        donorStats, p.bucketCap, epoch.map(_._1))
-      val cands = incrementalBucketCandidates(
-        bandedOf(index.select("id", "sz", "sig"), p.numHashes, p.bands),
-        bandedD, p.bucketCap, over, donorRows, p.broadcastRowLimit,
-        batchSharded = true).persist()
-      try {
-        val shingled = index.select(col("id"), col("hs"))
-          .unionAll(donorAll.select(col("id"), col("hs")))
-        // persisted + materialized inside, while the caches are hot
-        val verified = Dedup.verifyJaccard(cands, shingled, "id", "hs",
-          p.threshold,
-          broadcastSides = Dedup.sidesBroadcastable(cands, p.broadcastRowLimit))
-        val allTombs = donorRoots.flatMap(dr =>
-          VersionedTable.liveVersionDirs(spark, subRoot(dr, "tombstones")))
-        val allStats = donorRoots.flatMap(dr =>
-          VersionedTable.liveVersionDirs(spark, subRoot(dr, "bucketstats")))
-        val allSigs = donorRoots.flatMap(dr =>
-          VersionedTable.liveVersionDirs(spark, dr))
-        val v = epoch match {
-          case None =>
-            if (allTombs.nonEmpty)
-              VersionedTable.adoptFiles(spark, subRoot(root, "tombstones"), allTombs)
-            VersionedTable.adoptFiles(spark, statsRoot, allStats)
-            VersionedTable.adoptFiles(spark, root, allSigs)
-          case Some((e, pairsRoot)) =>
-            if (allTombs.nonEmpty)
-              adoptEpochLeg(spark, subRoot(root, "tombstones"), allTombs, e)
-            adoptEpochLeg(spark, statsRoot, allStats, e)
-            writeEpochLeg(spark, verified, pairsRoot, e)
-            adoptEpochLeg(spark, root, allSigs, e)
-        }
-        Some((v, verified))
-      } finally cands.unpersist(blocking = false)
-    } finally bandedD.unpersist(blocking = false)
-  }
-
-  /** The exactly-once commit protocol shared by every `*Epoch` ingest
-    * (crash-window analysis at [[ingestMinHashEpoch]]): the stats
-    * sidecar first as GUARDED LEG 0 — marker + hwm like a data leg, so
-    * a replay never double-commits the occupancy delta, and the
-    * artifact recompute pins its stats read BELOW the marker
-    * ([[statsBeforeEpoch]]) so cap engagement is identical either way —
-    * then each data `leg` IN ORDER under an `_epoch-<id>` marker riding
-    * the atomic staging rename, hwm recorded after each visibility,
-    * already-committed legs skipped. The LAST leg is the caller's
-    * replay key: "last leg committed" implies every earlier leg
-    * committed too, and a replay that finds only a PREFIX of the legs
-    * committed recomputes IDENTICAL artifacts — every family's outputs
-    * are pure functions of the batch and the index state BEFORE the
-    * epoch, and the replay-key leg (the one every read path unions)
-    * never committed in that window — then re-commits exactly the
-    * missing suffix. Returns the committed version of the last leg.
-    *
-    * Single-writer-per-lineage is ENFORCED loud, not just documented:
-    * after every leg write the root is checked for a second version
-    * carrying the same epoch marker (two writers racing the same epoch
-    * both pass the pre-write committed check, then both rename — the
-    * only silent-double-data window) and the loser throws with the
-    * duplicate versions named instead of leaving them to double reads.
-    */
-  /** One guarded WRITE leg outside [[commitEpoch]] (the merge paths
-    * interleave write legs with adoption legs, so they sequence legs
-    * themselves): skip if the epoch already committed here, else write
-    * under the `_epoch-<id>` marker with the single-writer check and
-    * the hwm witness — identical semantics to a commitEpoch leg.
+  /** One guarded WRITE leg — every [[commitEpoch]] leg, and the merge
+    * paths' write legs interleaved with adoption legs: skip if the epoch
+    * already committed here (reporting the version that carries its
+    * marker), else write under the `_epoch-<id>` marker with the
+    * single-writer check and the hwm witness.
     */
   private def writeEpochLeg(spark: SparkSession, df: DataFrame,
       legRoot: String, epochId: Long): Long = {
@@ -837,6 +819,30 @@ object IncrementalIndex {
     v
   }
 
+  /** The exactly-once commit protocol shared by every `*Epoch` ingest
+    * (crash-window analysis at [[ingestMinHashEpoch]]): the stats
+    * sidecar first as GUARDED LEG 0 — marker + hwm like a data leg, so
+    * a replay never double-commits the occupancy delta, and the
+    * artifact recompute pins its stats read BELOW the marker
+    * ([[statsBeforeEpoch]]) so cap engagement is identical either way —
+    * then each data `leg` IN ORDER under an `_epoch-<id>` marker riding
+    * the atomic staging rename, hwm recorded after each visibility,
+    * already-committed legs skipped. The LAST leg is the caller's
+    * replay key: "last leg committed" implies every earlier leg
+    * committed too, and a replay that finds only a PREFIX of the legs
+    * committed recomputes IDENTICAL artifacts — every family's outputs
+    * are pure functions of the batch and the index state BEFORE the
+    * epoch, and the replay-key leg (the one every read path unions)
+    * never committed in that window — then re-commits exactly the
+    * missing suffix. Returns the committed version of the last leg.
+    *
+    * Single-writer-per-lineage is ENFORCED loud, not just documented:
+    * after every leg write the root is checked for a second version
+    * carrying the same epoch marker (two writers racing the same epoch
+    * both pass the pre-write committed check, then both rename — the
+    * only silent-double-data window) and the loser throws with the
+    * duplicate versions named instead of leaving them to double reads.
+    */
   private def commitEpoch(spark: SparkSession, epochId: Long,
       stats: Option[(DataFrame, String)],
       legs: Seq[(DataFrame, String)]): Long = {
@@ -845,31 +851,12 @@ object IncrementalIndex {
       s"epoch $epochId already committed in the final leg " +
         s"${legs.last._2} — callers must key replay detection on the " +
         "final leg's root and drop before commitEpoch")
-    def writeLeg(df: DataFrame, legRoot: String): Long = {
-      val v = VersionedTable.write(spark, df, legRoot,
-        markers = Seq(s"_epoch-$epochId"))
-      assertSingleEpochWriter(spark, legRoot, epochId)
-      recordEpochHwm(spark, legRoot, epochId)
-      v
-    }
-    stats.foreach { case (s, statsRoot) =>
-      if (!epochCommittedIn(spark, statsRoot, epochId)) writeLeg(s, statsRoot)
-      // a skipped stats leg returns nothing, but must still PROVE the
-      // skip is a replay (marker present) and not a foreign hwm on a
-      // shared root — same contract as the data legs below
-      else committedLegVersion(spark, statsRoot, epochId)
-    }
-    var last = -1L
-    legs.foreach { case (df, legRoot) =>
-      last =
-        if (!epochCommittedIn(spark, legRoot, epochId)) writeLeg(df, legRoot)
-        // a skipped (non-final — see the require above) leg reports the
-        // version carrying ITS epoch marker — and fails loud when no
-        // marker backs the hwm's "committed" claim (shared-root foreign
-        // hwm, or compacted-away marker: see committedLegVersion)
-        else committedLegVersion(spark, legRoot, epochId)
-    }
-    last
+    // a skipped leg (stats or non-final data leg — see the require above)
+    // must still PROVE the skip is a replay: writeEpochLeg reports the
+    // version carrying ITS epoch marker and fails loud when no marker
+    // backs the hwm's "committed" claim (see committedLegVersion)
+    stats.foreach { case (s, statsRoot) => writeEpochLeg(spark, s, statsRoot, epochId) }
+    legs.map { case (df, legRoot) => writeEpochLeg(spark, df, legRoot, epochId) }.last
   }
 
   /** The committed version carrying epoch `epochId`'s `_epoch-` marker
@@ -1081,9 +1068,9 @@ object IncrementalIndex {
     * ([[mergeMinHashIndexes]] is the pair-family face): shards over
     * disjoint id sets each ran keep-the-min LOCALLY, so a fingerprint
     * present in BOTH shards has two "kept" rows and the global rule
-    * keeps only the minimum surviving id. Adopts the donor's
-    * fingerprint and tombstone version files as byte-level copies (the
-    * [[mergeMinHashIndexes]] log-adoption path) and returns the
+    * keeps only the minimum surviving id. The N-way merge with one
+    * donor: adopts the donor's fingerprint and tombstone version files
+    * as byte-level copies ([[adoptDonors]]) and returns the
     * verdict CORRECTION delta — (id, fp, kept) recomputed for every
     * member of a fingerprint group that spans both shards, the only
     * groups a merge can change (single-shard groups keep their minimum;
@@ -1096,7 +1083,7 @@ object IncrementalIndex {
     */
   def mergeExactIndexes(spark: SparkSession, root: String,
       donorRoot: String): (Long, DataFrame) =
-    mergeExactImpl(spark, root, donorRoot, None).get
+    mergeManyExactIndexes(spark, root, Seq(donorRoot))
 
   /** Exactly-once exact-dedup shard merge — the
     * [[mergeMinHashIndexesEpoch]] protocol with the verdict-correction
@@ -1107,46 +1094,7 @@ object IncrementalIndex {
   def mergeExactIndexesEpoch(spark: SparkSession, root: String,
       deltaRoot: String, donorRoot: String, epochId: Long)
       : Option[(Long, DataFrame)] =
-    mergeExactImpl(spark, root, donorRoot, Some((epochId, deltaRoot)))
-
-  private def mergeExactImpl(spark: SparkSession, root: String,
-      donorRoot: String,
-      epoch: Option[(Long, String)]): Option[(Long, DataFrame)] = {
-    import org.apache.spark.sql.expressions.Window
-    if (epoch.exists { case (e, _) =>
-        epochCommittedIn(spark, exactFpRoot(root), e) })
-      return None
-    val a = readExactIndex(spark, root)
-    val b = readExactIndex(spark, donorRoot).persist()
-    try {
-      val sharedFps = a.select("fp").distinct()
-        .join(b.select("fp").distinct(), "fp")
-      val w = Window.partitionBy("fp").orderBy("id")
-      val delta = a.select("id", "fp").unionAll(b.select("id", "fp"))
-        .join(sharedFps, "fp")
-        .withColumn("kept", row_number().over(w) === 1)
-        .select("id", "fp", "kept").persist()
-      delta.count() // materialize before the commit mutates the log
-      // log adoption (see mergeMinHashIndexes): donor tombstones first,
-      // then the fingerprint files as byte-level copies
-      val donorTombs = VersionedTable.liveVersionDirs(
-        spark, subRoot(donorRoot, "tombstones"))
-      val donorFpDirs = VersionedTable.liveVersionDirs(
-        spark, exactFpRoot(donorRoot))
-      val v = epoch match {
-        case None =>
-          if (donorTombs.nonEmpty)
-            VersionedTable.adoptFiles(spark, subRoot(root, "tombstones"), donorTombs)
-          VersionedTable.adoptFiles(spark, exactFpRoot(root), donorFpDirs)
-        case Some((e, deltaRoot)) =>
-          if (donorTombs.nonEmpty)
-            adoptEpochLeg(spark, subRoot(root, "tombstones"), donorTombs, e)
-          writeEpochLeg(spark, delta, deltaRoot, e)
-          adoptEpochLeg(spark, exactFpRoot(root), donorFpDirs, e)
-      }
-      Some((v, delta))
-    } finally b.unpersist(blocking = false)
-  }
+    mergeManyExactIndexesEpoch(spark, root, deltaRoot, Seq(donorRoot), epochId)
 
   /** N-WAY exact-dedup shard merge — the verdict-family face of the
     * d69 fan-in: ONE fingerprint pass over the adopter plus ALL donors
@@ -1169,7 +1117,7 @@ object IncrementalIndex {
       donorRoots: Seq[String]): (Long, DataFrame) =
     mergeManyExactImpl(spark, root, donorRoots, None).get
 
-  /** Exactly-once N-way exact merge — [[mergeManyExactIndexesEpoch]]
+  /** Exactly-once N-way exact merge — [[mergeManyExactIndexes]]
     * under the ONE epoch id for the whole fan-in step (the d69
     * convention: orchestrator-owned, monotone per adopter lineage).
     */
@@ -1204,21 +1152,9 @@ object IncrementalIndex {
         .withColumn("kept", row_number().over(w) === 1)
         .select("id", "fp", "kept").persist()
       delta.count() // materialize before the commit mutates the log
-      val allTombs = donorRoots.flatMap(dr =>
-        VersionedTable.liveVersionDirs(spark, subRoot(dr, "tombstones")))
-      val allFps = donorRoots.flatMap(dr =>
-        VersionedTable.liveVersionDirs(spark, exactFpRoot(dr)))
-      val v = epoch match {
-        case None =>
-          if (allTombs.nonEmpty)
-            VersionedTable.adoptFiles(spark, subRoot(root, "tombstones"), allTombs)
-          VersionedTable.adoptFiles(spark, exactFpRoot(root), allFps)
-        case Some((e, deltaRoot)) =>
-          if (allTombs.nonEmpty)
-            adoptEpochLeg(spark, subRoot(root, "tombstones"), allTombs, e)
-          writeEpochLeg(spark, delta, deltaRoot, e)
-          adoptEpochLeg(spark, exactFpRoot(root), allFps, e)
-      }
+      // log adoption (see adoptDonors): tombstones first, then the
+      // fingerprint files as byte-level copies
+      val v = adoptDonors(spark, root, donorRoots, Nil, exactFpRoot, delta, epoch)
       Some((v, delta))
     } finally tagged.unpersist(blocking = false)
   }
@@ -1305,141 +1241,53 @@ object IncrementalIndex {
     * retraction-safe).
     */
   def readSimHashIndex(spark: SparkSession, root: String,
-      upTo: Option[Long] = None): DataFrame =
-    applyTombstones(spark, root,
-      VersionedTable.readAllVersions(spark, root, upTo))
+      upTo: Option[Long] = None): DataFrame = readSigLog(spark, root, upTo)
 
   /** Ingest one batch into a SimHash near-dup index: sign ONLY the
     * batch (one 60-bit signature per doc), generate block-collision
     * candidates restricted to pairs touching the batch through the
     * shared [[incrementalBucketCandidates]] (index streams, batch
     * broadcasts under the size gate, over-cap blocks rank-chunk), and
-    * verify with exact popcount over the STORED signatures — pruned to
-    * candidate ids by a broadcast semi-join first, so the index never
+    * verify with exact popcount over the STORED signatures
+    * ([[Dedup.verifyHamming]]: one scan of the signature log, candidate
+    * sides broadcast under the candidate-count gate), so the index never
     * shuffles for verification either. Accumulated pairs across ingests
     * equal the one-shot [[Dedup.simHashPairsPortable]] pair list over
     * the union (the d58 gate; order-invariant by the disjoint-union
     * theorem). Returns (committed version, new pairs (a, b, hamming)).
     */
-  private final case class SimHashArtifacts(
-      batchSigs: DataFrame, batchStats: DataFrame, verified: DataFrame,
-      release: () => Unit)
-
-  private def simHashBatchArtifacts(spark: SparkSession, root: String,
-      batch: DataFrame, idCol: String, textCol: String, maxHamming: Int,
-      shingleN: Int, bucketCap: Int, broadcastRowLimit: Long,
-      excludeEpoch: Option[Long] = None): SimHashArtifacts =
-    sigBatchArtifacts(spark, root,
-      simHashSignatures(batch, idCol, textCol, shingleN),
-      maxHamming, bucketCap, broadcastRowLimit, excludeEpoch)
-
-  /** The SimHash ingest pipeline below the SIGNING step — banding, caps,
-    * candidate generation, popcount verify — over any (id, sig) frame.
-    * 64-bit-safe: the 4×16-bit blocks cover bits 0–63 (arithmetic
-    * shift's sign-fill dies under the 0xFFFF mask), so precomputed
-    * perceptual hashes ride the same machinery as the 60-bit text
-    * signatures, and the pigeonhole banding stays lossless for
-    * hamming ≤ 3 at either width.
-    */
-  private def sigBatchArtifacts(spark: SparkSession, root: String,
-      sigs: DataFrame, maxHamming: Int, bucketCap: Int,
-      broadcastRowLimit: Long,
-      excludeEpoch: Option[Long] = None): SimHashArtifacts = {
-    val batchSigs = sigs.persist()
-    try {
-      val haveIndex = VersionedTable.versions(spark, root).nonEmpty
-      val prior = if (haveIndex) Some(readSimHashIndex(spark, root)) else None
-      val bandedB = bandedOfSimHash(batchSigs).persist()
-      // persisted: the stats delta otherwise executes twice per ingest
-      // (the over-cap collect job + the sidecar write) — see the
-      // minHashBatchArtifacts note / JobProfile d56
-      val batchStats = bucketStats(bandedB).persist()
-      val statsRoot = subRoot(root, "bucketstats")
-      // one job: materializes, collects over-cap list + gate row count
-      val (over, batchRows) = overCapAndBatchRows(spark, statsRoot,
-        batchStats, bucketCap, excludeEpoch)
-      val cands = (prior match {
-        case Some(ix) => incrementalBucketCandidates(
-          bandedOfSimHash(ix), bandedB, bucketCap, over,
-          batchRows, broadcastRowLimit)
-        case None => incrementalBucketCandidates(
-          bandedB.filter(lit(false)), bandedB, bucketCap, over,
-          batchRows, broadcastRowLimit)
-      }).persist()
-      try {
-        val sigs = prior.map(_.unionAll(batchSigs)).getOrElse(batchSigs)
-        // the verifyJaccard exchange shape: exploded pair sides broadcast
-        // into ONE scan of the signature log (the per-side prune form
-        // scanned it once per broadcast subtree), signatures re-pair in a
-        // candidate-bounded aggregate
-        // broadcast-gate verdict shared with candidate generation (see
-        // verifyJaccard's broadcastSides): above the gate the exploded
-        // sides take a plain id shuffle join — the r14 100× SimHash
-        // shard bootstrap died building this broadcast (>1 GiB of
-        // serialized results vs the 1 GiB driver default)
-        val sidesHint: DataFrame => DataFrame =
-          if (Dedup.sidesBroadcastable(cands, broadcastRowLimit))
-            df => broadcast(df)
-          else identity
-        val verified = sigs.select(col("id"), col("sig"))
-          .join(sidesHint(Dedup.pairSides(cands)), "id")
-          .groupBy("a", "b")
-          .agg(
-            first(when(col("isA"), col("sig")), ignoreNulls = true).as("siga"),
-            first(when(!col("isA"), col("sig")), ignoreNulls = true).as("sigb"))
-          .filter(col("siga").isNotNull && col("sigb").isNotNull)
-          .select(col("a"), col("b"),
-            bit_count(col("siga").bitwiseXOR(col("sigb"))).cast("int").as("hamming"))
-          .filter(col("hamming") <= maxHamming)
-          .persist()
-        verified.count()
-        SimHashArtifacts(batchSigs, batchStats, verified, () => {
-          batchStats.unpersist(blocking = false)
-          bandedB.unpersist(blocking = false)
-          batchSigs.unpersist(blocking = false)
-        })
-      } finally cands.unpersist(blocking = false)
-    } catch {
-      case t: Throwable => batchSigs.unpersist(blocking = false); throw t
-    }
-  }
-
   def ingestSimHash(spark: SparkSession, root: String, batch: DataFrame,
       idCol: String, textCol: String, maxHamming: Int = 3, shingleN: Int = 3,
       bucketCap: Int = 4096,
-      broadcastRowLimit: Long = DefaultBroadcastRowLimit): (Long, DataFrame) = {
-    val a = simHashBatchArtifacts(spark, root, batch, idCol, textCol,
-      maxHamming, shingleN, bucketCap, broadcastRowLimit)
-    try {
-      VersionedTable.write(spark, a.batchStats, subRoot(root, "bucketstats")) // stats first (see ingestMinHash)
-      val v = VersionedTable.write(spark, a.batchSigs, root)
-      (v, a.verified)
-    } finally a.release()
-  }
+      broadcastRowLimit: Long = DefaultBroadcastRowLimit): (Long, DataFrame) =
+    ingestSigs(spark, root, simHashSignatures(batch, idCol, textCol, shingleN),
+      simHashFamily(maxHamming, bucketCap, broadcastRowLimit), None).get
 
   /** Exactly-once streaming SimHash ingest — [[ingestMinHashEpoch]]'s
     * protocol (same crash-window analysis, same two-witness replay
     * detection) over the SimHash artifacts. Returns None on a replayed
-    * epoch; the pattern extends to any family whose ingest decomposes
-    * into (batch rows, stats delta, pairs).
+    * epoch.
     */
   def ingestSimHashEpoch(spark: SparkSession, root: String,
       pairsRoot: String, batch: DataFrame, idCol: String, textCol: String,
       epochId: Long, maxHamming: Int = 3, shingleN: Int = 3,
       bucketCap: Int = 4096,
-      broadcastRowLimit: Long = DefaultBroadcastRowLimit): Option[DataFrame] = {
-    if (epochCommittedIn(spark, root, epochId)) return None
-    val a = simHashBatchArtifacts(spark, root, batch, idCol, textCol,
-      maxHamming, shingleN, bucketCap, broadcastRowLimit,
-      excludeEpoch = Some(epochId))
-    try {
-      commitEpoch(spark, epochId,
-        Some((a.batchStats, subRoot(root, "bucketstats"))),
-        Seq(a.verified -> pairsRoot, a.batchSigs -> root))
-      Some(a.verified)
-    } catch {
-      case t: Throwable => a.verified.unpersist(blocking = false); throw t
-    } finally a.release()
+      broadcastRowLimit: Long = DefaultBroadcastRowLimit): Option[DataFrame] =
+    ingestSigs(spark, root, simHashSignatures(batch, idCol, textCol, shingleN),
+      simHashFamily(maxHamming, bucketCap, broadcastRowLimit),
+      Some((epochId, pairsRoot))).map(_._2)
+
+  /** Precomputed 64-bit image hashes as stored SimHash rows (id, sig).
+    * The 4×16-bit blocks cover bits 0–63 (arithmetic shift's sign-fill
+    * dies under the 0xFFFF mask), so these ride the same banding as the
+    * 60-bit text signatures, and the pigeonhole banding stays lossless
+    * for hamming ≤ 3 at either width.
+    */
+  private def imageHashSigs(batch: DataFrame, idCol: String, sigCol: String,
+      maxHamming: Int): DataFrame = {
+    require(maxHamming <= 3,
+      "4x16-bit pigeonhole banding is lossless only for hamming <= 3")
+    batch.select(col(idCol).as("id"), col(sigCol).cast("long").as("sig"))
   }
 
   /** Incremental perceptual-hash image near-dup index (d77):
@@ -1461,18 +1309,9 @@ object IncrementalIndex {
   def ingestImageHashes(spark: SparkSession, root: String, batch: DataFrame,
       idCol: String, sigCol: String, maxHamming: Int = 3,
       bucketCap: Int = 4096,
-      broadcastRowLimit: Long = DefaultBroadcastRowLimit): (Long, DataFrame) = {
-    require(maxHamming <= 3,
-      "4x16-bit pigeonhole banding is lossless only for hamming <= 3")
-    val a = sigBatchArtifacts(spark, root,
-      batch.select(col(idCol).as("id"), col(sigCol).cast("long").as("sig")),
-      maxHamming, bucketCap, broadcastRowLimit)
-    try {
-      VersionedTable.write(spark, a.batchStats, subRoot(root, "bucketstats"))
-      val v = VersionedTable.write(spark, a.batchSigs, root)
-      (v, a.verified)
-    } finally a.release()
-  }
+      broadcastRowLimit: Long = DefaultBroadcastRowLimit): (Long, DataFrame) =
+    ingestSigs(spark, root, imageHashSigs(batch, idCol, sigCol, maxHamming),
+      simHashFamily(maxHamming, bucketCap, broadcastRowLimit), None).get
 
   /** Exactly-once image-hash ingest — [[ingestSimHashEpoch]]'s protocol
     * (same crash windows, same two-witness replay detection) over
@@ -1481,37 +1320,26 @@ object IncrementalIndex {
   def ingestImageHashesEpoch(spark: SparkSession, root: String,
       pairsRoot: String, batch: DataFrame, idCol: String, sigCol: String,
       epochId: Long, maxHamming: Int = 3, bucketCap: Int = 4096,
-      broadcastRowLimit: Long = DefaultBroadcastRowLimit): Option[DataFrame] = {
-    require(maxHamming <= 3,
-      "4x16-bit pigeonhole banding is lossless only for hamming <= 3")
-    if (epochCommittedIn(spark, root, epochId)) return None
-    val a = sigBatchArtifacts(spark, root,
-      batch.select(col(idCol).as("id"), col(sigCol).cast("long").as("sig")),
-      maxHamming, bucketCap, broadcastRowLimit, excludeEpoch = Some(epochId))
-    try {
-      commitEpoch(spark, epochId,
-        Some((a.batchStats, subRoot(root, "bucketstats"))),
-        Seq(a.verified -> pairsRoot, a.batchSigs -> root))
-      Some(a.verified)
-    } catch {
-      case t: Throwable => a.verified.unpersist(blocking = false); throw t
-    } finally a.release()
-  }
+      broadcastRowLimit: Long = DefaultBroadcastRowLimit): Option[DataFrame] =
+    ingestSigs(spark, root, imageHashSigs(batch, idCol, sigCol, maxHamming),
+      simHashFamily(maxHamming, bucketCap, broadcastRowLimit),
+      Some((epochId, pairsRoot))).map(_._2)
 
   /** Merge an independently-built SimHash index into `root` — the
     * [[mergeMinHashIndexes]] shape over the SimHash machinery (and the
     * easiest merge of the family: portable md5-60bit signatures have NO
     * frozen geometry, so any two SimHash indexes with the same
-    * `shingleN` are mergeable). Cross pairs verified by exact popcount
-    * over the stored signatures; the data move is log adoption
-    * (tombstones → stats → signatures). Accumulated pairs equal the
-    * one-shot portable-SimHash run over the union (the d66 gate).
+    * `shingleN` are mergeable). The N-way merge with one donor; cross
+    * pairs verified by exact popcount over the stored signatures; the
+    * data move is log adoption (tombstones → stats → signatures).
+    * Accumulated pairs equal the one-shot portable-SimHash run over the
+    * union (the d66 gate).
     */
   def mergeSimHashIndexes(spark: SparkSession, root: String,
       donorRoot: String, maxHamming: Int = 3, bucketCap: Int = 4096,
       broadcastRowLimit: Long = DefaultBroadcastRowLimit): (Long, DataFrame) =
-    mergeSimHashImpl(spark, root, donorRoot, maxHamming, bucketCap,
-      broadcastRowLimit, None).get
+    mergeManySimHashIndexes(spark, root, Seq(donorRoot), maxHamming, bucketCap,
+      broadcastRowLimit)
 
   /** Exactly-once SimHash shard merge — the [[mergeMinHashIndexesEpoch]]
     * protocol (tombstones → stats → pairs → signatures, signatures the
@@ -1522,71 +1350,11 @@ object IncrementalIndex {
       maxHamming: Int = 3, bucketCap: Int = 4096,
       broadcastRowLimit: Long = DefaultBroadcastRowLimit)
       : Option[(Long, DataFrame)] =
-    mergeSimHashImpl(spark, root, donorRoot, maxHamming, bucketCap,
-      broadcastRowLimit, Some((epochId, pairsRoot)))
-
-  private def mergeSimHashImpl(spark: SparkSession, root: String,
-      donorRoot: String, maxHamming: Int, bucketCap: Int,
-      broadcastRowLimit: Long,
-      epoch: Option[(Long, String)]): Option[(Long, DataFrame)] = {
-    if (epoch.exists { case (e, _) => epochCommittedIn(spark, root, e) })
-      return None
-    val donor = readSimHashIndex(spark, donorRoot)
-    val index = readSimHashIndex(spark, root)
-    val bandedD = bandedOfSimHash(donor).persist()
-    try {
-      val statsRoot = subRoot(root, "bucketstats")
-      // one job: materializes, collects over-cap list + gate row count
-      val (over, donorRows) = overCapAndBatchRows(spark, statsRoot,
-        bucketStats(bandedD), bucketCap, epoch.map(_._1))
-      // crossOnly (see mergeMinHashIndexes): donor-internal candidates
-      // never generate, and disjoint shard ids make every candidate
-      // index×donor by construction — no membership probe
-      val cands = incrementalBucketCandidates(
-        bandedOfSimHash(index), bandedD, bucketCap, over,
-        donorRows, broadcastRowLimit, crossOnly = true).persist()
-      try {
-        val candIds = cands.select(col("a").as("id"))
-          .unionAll(cands.select(col("b").as("id"))).distinct()
-        val sigs = index.unionAll(donor)
-        val pruned = sigs.join(broadcast(candIds), "id")
-        val verified = cands
-          .join(broadcast(pruned.select(col("id").as("a"), col("sig").as("siga"))), "a")
-          .join(broadcast(pruned.select(col("id").as("b"), col("sig").as("sigb"))), "b")
-          .select(col("a"), col("b"),
-            bit_count(col("siga").bitwiseXOR(col("sigb"))).cast("int").as("hamming"))
-          .filter(col("hamming") <= maxHamming)
-          .persist()
-        verified.count()
-        val donorTombs = VersionedTable.liveVersionDirs(
-          spark, subRoot(donorRoot, "tombstones"))
-        val donorStatsDirs = VersionedTable.liveVersionDirs(
-          spark, subRoot(donorRoot, "bucketstats"))
-        val donorSigDirs = VersionedTable.liveVersionDirs(spark, donorRoot)
-        val v = epoch match {
-          case None =>
-            if (donorTombs.nonEmpty)
-              VersionedTable.adoptFiles(spark, subRoot(root, "tombstones"), donorTombs)
-            VersionedTable.adoptFiles(spark, statsRoot, donorStatsDirs)
-            VersionedTable.adoptFiles(spark, root, donorSigDirs)
-          case Some((e, pairsRoot)) =>
-            if (donorTombs.nonEmpty)
-              adoptEpochLeg(spark, subRoot(root, "tombstones"), donorTombs, e)
-            adoptEpochLeg(spark, statsRoot, donorStatsDirs, e)
-            writeEpochLeg(spark, verified, pairsRoot, e)
-            adoptEpochLeg(spark, root, donorSigDirs, e)
-        }
-        Some((v, verified))
-      } finally cands.unpersist(blocking = false)
-    } finally bandedD.unpersist(blocking = false)
-  }
+    mergeManySimHashIndexesEpoch(spark, root, pairsRoot, Seq(donorRoot), epochId,
+      maxHamming, bucketCap, broadcastRowLimit)
 
   /** N-WAY SimHash shard merge — [[mergeManyMinHashIndexes]]'s one-pass
-    * fan-in over the SimHash machinery: the donor union plays the batch
-    * role with per-shard tags, so the batch-internal candidates ARE the
-    * donor×donor pairs a fold pays N−1 growing-adopter passes for, and
-    * `batchSharded` keeps a pair iff its sides live in different shards
-    * (shard-internal pairs are already in shard logs). Signatures are
+    * fan-in over the SimHash machinery ([[mergeShards]]). Signatures are
     * PORTABLE (no frozen per-shard geometry), so any same-shingleN
     * shards fan in. Gate: d73 == d3's exact oracle with a mod-3 split
     * that puts every twin pair cross-shard.
@@ -1594,8 +1362,8 @@ object IncrementalIndex {
   def mergeManySimHashIndexes(spark: SparkSession, root: String,
       donorRoots: Seq[String], maxHamming: Int = 3, bucketCap: Int = 4096,
       broadcastRowLimit: Long = DefaultBroadcastRowLimit): (Long, DataFrame) =
-    mergeManySimHashImpl(spark, root, donorRoots, maxHamming, bucketCap,
-      broadcastRowLimit, None).get
+    mergeShards(spark, root, donorRoots,
+      simHashFamily(maxHamming, bucketCap, broadcastRowLimit), None).get
 
   /** Exactly-once N-way SimHash merge (one orchestrator-owned epoch id
     * for the whole fan-in step, the d69 convention).
@@ -1604,88 +1372,16 @@ object IncrementalIndex {
       pairsRoot: String, donorRoots: Seq[String], epochId: Long,
       maxHamming: Int = 3, bucketCap: Int = 4096,
       broadcastRowLimit: Long = DefaultBroadcastRowLimit): Option[(Long, DataFrame)] =
-    mergeManySimHashImpl(spark, root, donorRoots, maxHamming, bucketCap,
-      broadcastRowLimit, Some((epochId, pairsRoot)))
-
-  private def mergeManySimHashImpl(spark: SparkSession, root: String,
-      donorRoots: Seq[String], maxHamming: Int, bucketCap: Int,
-      broadcastRowLimit: Long,
-      epoch: Option[(Long, String)]): Option[(Long, DataFrame)] = {
-    require(donorRoots.nonEmpty, "mergeManySimHashIndexes needs donors")
-    if (epoch.exists { case (e, _) => epochCommittedIn(spark, root, e) })
-      return None
-    val donors = donorRoots.map(readSimHashIndex(spark, _))
-    val index = readSimHashIndex(spark, root)
-    val bandedD = donors.zipWithIndex.map { case (d, i) =>
-      bandedOfSimHash(d).withColumn("sh", lit(i + 1))
-    }.reduce(_.unionAll(_)).persist()
-    try {
-      val statsRoot = subRoot(root, "bucketstats")
-      // one job: materializes, collects over-cap list + gate row count
-      val (over, donorRows) = overCapAndBatchRows(spark, statsRoot,
-        bucketStats(bandedD), bucketCap, epoch.map(_._1))
-      val cands = incrementalBucketCandidates(
-        bandedOfSimHash(index), bandedD, bucketCap, over,
-        donorRows, broadcastRowLimit, batchSharded = true).persist()
-      try {
-        val candIds = cands.select(col("a").as("id"))
-          .unionAll(cands.select(col("b").as("id"))).distinct()
-        val sigs = (index +: donors).reduce(_.unionAll(_))
-        val pruned = sigs.join(broadcast(candIds), "id")
-        val verified = cands
-          .join(broadcast(pruned.select(col("id").as("a"), col("sig").as("siga"))), "a")
-          .join(broadcast(pruned.select(col("id").as("b"), col("sig").as("sigb"))), "b")
-          .select(col("a"), col("b"),
-            bit_count(col("siga").bitwiseXOR(col("sigb"))).cast("int").as("hamming"))
-          .filter(col("hamming") <= maxHamming)
-          .persist()
-        verified.count()
-        val allTombs = donorRoots.flatMap(dr =>
-          VersionedTable.liveVersionDirs(spark, subRoot(dr, "tombstones")))
-        val allStats = donorRoots.flatMap(dr =>
-          VersionedTable.liveVersionDirs(spark, subRoot(dr, "bucketstats")))
-        val allSigs = donorRoots.flatMap(dr =>
-          VersionedTable.liveVersionDirs(spark, dr))
-        val v = epoch match {
-          case None =>
-            if (allTombs.nonEmpty)
-              VersionedTable.adoptFiles(spark, subRoot(root, "tombstones"), allTombs)
-            VersionedTable.adoptFiles(spark, statsRoot, allStats)
-            VersionedTable.adoptFiles(spark, root, allSigs)
-          case Some((e, pairsRoot)) =>
-            if (allTombs.nonEmpty)
-              adoptEpochLeg(spark, subRoot(root, "tombstones"), allTombs, e)
-            adoptEpochLeg(spark, statsRoot, allStats, e)
-            writeEpochLeg(spark, verified, pairsRoot, e)
-            adoptEpochLeg(spark, root, allSigs, e)
-        }
-        Some((v, verified))
-      } finally cands.unpersist(blocking = false)
-    } finally bandedD.unpersist(blocking = false)
-  }
-
-  /** Compact a SimHash index (signature log + stats sidecar). */
-  def compactSimHashIndex(spark: SparkSession, root: String,
-      vacuum: Boolean = true): Unit = {
-    compactLog(spark, root, vacuum = vacuum)
-    compactLog(spark, subRoot(root, "bucketstats"),
-      _.groupBy("band", "bucket").agg(sum(col("n")).as("n")), vacuum)
-  }
+    mergeShards(spark, root, donorRoots,
+      simHashFamily(maxHamming, bucketCap, broadcastRowLimit),
+      Some((epochId, pairsRoot)))
 
   /** Purge a SimHash index — the [[purgeDedupIndex]] shape: surviving
     * signatures checkpointed, stats re-derived exactly, tombstones
     * cleared last.
     */
-  def purgeSimHashIndex(spark: SparkSession, root: String): Unit = {
-    purgeLog(spark, root, root)
-    val statsRoot = subRoot(root, "bucketstats")
-    VersionedTable.writeCheckpoint(spark,
-      bucketStats(bandedOfSimHash(
-        VersionedTable.readAllVersions(spark, root))),
-      statsRoot, VersionedTable.versions(spark, statsRoot).last)
-    VersionedTable.vacuumCovered(spark, statsRoot)
-    clearTombstones(spark, root)
-  }
+  def purgeSimHashIndex(spark: SparkSession, root: String): Unit =
+    purgeSigIndex(spark, root, bandedOfSimHash)
 
   // ------------------------------------------- prefix-filter set similarity
 
@@ -1770,41 +1466,20 @@ object IncrementalIndex {
     applyTombstones(spark, root,
       VersionedTable.readAllVersions(spark, prefixTokRoot(root), upTo))
 
-  /** Ingest one batch of distinct (id, elem) set rows: sort ONLY the
-    * batch under the frozen element order, find the exact
-    * Jaccard ≥ num/den pairs the batch adds (batch-internal +
-    * batch×index through [[incrementalBucketCandidates]] — the index
-    * streams map-side, the batch broadcasts under the size gate, only
-    * over-cap prefix elements rank-chunk-shuffle), verify with the
-    * STORED sorted-element arrays (pure integer arithmetic,
-    * den·|A∩B| ≥ num·|A∪B| — no FP), and append the batch's token rows
-    * as the next index version (id-clustered within partitions — the
-    * TF-IDF zone-map lesson — so candidate-bounded probes prune row
-    * groups). Accumulated pairs across ingests equal the one-shot
-    * [[Dedup.prefixJaccardJoin]] pair list over the union EXACTLY, even
-    * though the one-shot sorts under its own corpus-wide df: both sides
-    * are exact all-pairs answers, and exactness is order-independent
-    * (the d59 gate; per-ingest pair sets are disjoint — a pair is
-    * emitted by exactly the ingest that indexes its later-arriving
-    * member — so the equality is split/order invariant, the d54
-    * theorem). Returns (committed version, new pairs (ia, ib, inter,
-    * un) with ia < ib), pairs persisted + materialized, caller
-    * unpersists.
-    */
   private final case class PrefixArtifacts(
       batchTok: DataFrame, batchStats: DataFrame, verified: DataFrame,
       release: () => Unit)
 
-  /** `shardTags` (the N-way merge): an (id, sh) frame tagging each
-    * batch id with its donor shard — batch-sized, joined onto the
-    * banded batch rows so `batchSharded` candidate filtering can drop
-    * shard-internal pairs inside the join. Exclusive with `crossOnly`
-    * (the binary-merge face), matching the machinery's contract.
+  /** The compute half of a prefix ingest or shard merge — the
+    * [[batchArtifacts]] contract over token rows. `donors` (the shard
+    * merges) is the candidate machinery's donor count, and `shardTags` (N-way merges of two or more donors) an
+    * (id, sh) frame tagging each batch id with its donor shard —
+    * batch-sized, joined onto the banded batch rows so cross-shard
+    * candidate filtering can drop shard-internal pairs inside the join.
     */
   private def prefixBatchArtifacts(spark: SparkSession, root: String,
       sets: DataFrame, p: PrefixJaccardParams,
-      excludeEpoch: Option[Long] = None,
-      crossOnly: Boolean = false,
+      excludeEpoch: Option[Long] = None, donors: Int = 0,
       shardTags: Option[DataFrame] = None): PrefixArtifacts = {
     val s0 = sets.persist()
     try {
@@ -1828,21 +1503,15 @@ object IncrementalIndex {
         }).persist()
         // persisted: the stats delta otherwise executes twice per ingest
         // (the over-cap collect job + the sidecar write) — see the
-        // minHashBatchArtifacts note / JobProfile d56
+        // batchArtifacts note / JobProfile d56
         val batchStats = bucketStats(bandedB).persist()
         // one job: materializes, collects over-cap list + gate row count
         val (over, batchRows) = overCapAndBatchRows(spark,
           prefixStatsRoot(root), batchStats, p.bucketCap, excludeEpoch)
-        val cands = (prior match {
-          case Some(ix) => incrementalBucketCandidates(
-            bandedOfPrefix(ix), bandedB, p.bucketCap, over,
-            batchRows, p.broadcastRowLimit, crossOnly,
-            batchSharded = shardTags.nonEmpty)
-          case None => incrementalBucketCandidates(
-            bandedB.filter(lit(false)), bandedB, p.bucketCap, over,
-            batchRows, p.broadcastRowLimit, crossOnly,
-            batchSharded = shardTags.nonEmpty)
-        }).persist()
+        val cands = incrementalBucketCandidates(
+          prior.map(bandedOfPrefix).getOrElse(bandedB.filter(lit(false))),
+          bandedB, p.bucketCap, over, batchRows, p.broadcastRowLimit,
+          donors).persist()
         try {
           // verification with the verifyJaccard exchange discipline: the
           // candidate pair list explodes to per-side probe rows that
@@ -1889,6 +1558,27 @@ object IncrementalIndex {
     }
   }
 
+  /** Ingest one batch of distinct (id, elem) set rows: sort ONLY the
+    * batch under the frozen element order, find the exact
+    * Jaccard ≥ num/den pairs the batch adds (batch-internal +
+    * batch×index through [[incrementalBucketCandidates]] — the index
+    * streams map-side, the batch broadcasts under the size gate, only
+    * over-cap prefix elements rank-chunk-shuffle), verify with the
+    * STORED sorted-element arrays (pure integer arithmetic,
+    * den·|A∩B| ≥ num·|A∪B| — no FP), and append the batch's token rows
+    * as the next index version (id-clustered within partitions — the
+    * TF-IDF zone-map lesson — so candidate-bounded probes prune row
+    * groups). Accumulated pairs across ingests equal the one-shot
+    * [[Dedup.prefixJaccardJoin]] pair list over the union EXACTLY, even
+    * though the one-shot sorts under its own corpus-wide df: both sides
+    * are exact all-pairs answers, and exactness is order-independent
+    * (the d59 gate; per-ingest pair sets are disjoint — a pair is
+    * emitted by exactly the ingest that indexes its later-arriving
+    * member — so the equality is split/order invariant, the d54
+    * theorem). Returns (committed version, new pairs (ia, ib, inter,
+    * un) with ia < ib), pairs persisted + materialized, caller
+    * unpersists.
+    */
   def ingestPrefixJaccard(spark: SparkSession, root: String, sets: DataFrame,
       p: PrefixJaccardParams = PrefixJaccardParams()): (Long, DataFrame) = {
     val a = prefixBatchArtifacts(spark, root, sets, p)
@@ -1936,12 +1626,12 @@ object IncrementalIndex {
     * accumulated pairs equal the one-shot over the union (the d67
     * gate). Donor retractions are honored by construction: the re-sort
     * starts from the donor's tombstone-FILTERED live rows, so nothing
-    * retracted ever enters `root`.
+    * retracted ever enters `root`. The N-way merge with one donor.
     */
   def mergePrefixIndexes(spark: SparkSession, root: String,
       donorRoot: String,
       p: PrefixJaccardParams = PrefixJaccardParams()): (Long, DataFrame) =
-    mergePrefixImpl(spark, root, donorRoot, p, None).get
+    mergeManyPrefixIndexes(spark, root, Seq(donorRoot), p)
 
   /** Exactly-once prefix-filter shard merge. Unlike the adoption
     * families the prefix merge RE-WRITES the donor's token rows (they
@@ -1954,39 +1644,7 @@ object IncrementalIndex {
       pairsRoot: String, donorRoot: String, epochId: Long,
       p: PrefixJaccardParams = PrefixJaccardParams())
       : Option[(Long, DataFrame)] =
-    mergePrefixImpl(spark, root, donorRoot, p, Some((epochId, pairsRoot)))
-
-  private def mergePrefixImpl(spark: SparkSession, root: String,
-      donorRoot: String, p: PrefixJaccardParams,
-      epoch: Option[(Long, String)]): Option[(Long, DataFrame)] = {
-    if (epoch.exists { case (e, _) =>
-        epochCommittedIn(spark, prefixTokRoot(root), e) })
-      return None
-    // no full-width log cache: `toks` dominates the row, and the two
-    // consumers need different slices (full (id, toks) for the batch
-    // artifacts, id-only for the membership probe) — column-pruned scans
-    val donorLive = readPrefixIndex(spark, donorRoot)
-    val donorSets = donorLive.select(col("id"), explode(col("toks")).as("elem"))
-    // crossOnly: donor-internal candidates never generate (they are
-    // already in the donor's own pair log) and disjoint shard ids make
-    // every verified pair index×donor by construction
-    val a = prefixBatchArtifacts(spark, root, donorSets, p,
-      excludeEpoch = epoch.map(_._1), crossOnly = true)
-    try {
-      val v = epoch match {
-        case None =>
-          VersionedTable.write(spark, a.batchStats, prefixStatsRoot(root))
-          VersionedTable.write(spark, a.batchTok, prefixTokRoot(root))
-        case Some((e, pairsRoot)) =>
-          commitEpoch(spark, e,
-            Some((a.batchStats, prefixStatsRoot(root))),
-            Seq(a.verified -> pairsRoot, a.batchTok -> prefixTokRoot(root)))
-      }
-      Some((v, a.verified))
-    } catch {
-      case t: Throwable => a.verified.unpersist(blocking = false); throw t
-    } finally a.release()
-  }
+    mergeManyPrefixIndexesEpoch(spark, root, pairsRoot, Seq(donorRoot), epochId, p)
 
   /** N-WAY prefix-filter shard merge — the fan-in for the one family
     * that cannot adopt files: every donor's stored token arrays RE-SORT
@@ -2026,12 +1684,15 @@ object IncrementalIndex {
       .reduce(_.unionAll(_))
     // (id, sh) tags — batch-sized column-pruned id reads, joined onto
     // the banded batch inside prefixBatchArtifacts so donor-internal
-    // pairs are dropped INSIDE the candidate join
-    val tags = donorLive.zipWithIndex.map { case (d, i) =>
-      d.select(col("id"), lit(i + 1).as("sh"))
-    }.reduce(_.unionAll(_))
+    // pairs are dropped INSIDE the candidate join. One donor needs no
+    // tags: its self-join is never planned
+    val tags =
+      if (donorLive.size < 2) None
+      else Some(donorLive.zipWithIndex.map { case (d, i) =>
+        d.select(col("id"), lit(i + 1).as("sh"))
+      }.reduce(_.unionAll(_)))
     val a = prefixBatchArtifacts(spark, root, donorSets, p,
-      excludeEpoch = epoch.map(_._1), shardTags = Some(tags))
+      excludeEpoch = epoch.map(_._1), donors = donorRoots.size, shardTags = tags)
     try {
       val v = epoch match {
         case None =>
@@ -2140,9 +1801,7 @@ object IncrementalIndex {
 
   /** All embedding-signature rows indexed so far, minus retracted ids. */
   def readSrpIndex(spark: SparkSession, root: String,
-      upTo: Option[Long] = None): DataFrame =
-    applyTombstones(spark, root,
-      VersionedTable.readAllVersions(spark, root, upTo))
+      upTo: Option[Long] = None): DataFrame = readSigLog(spark, root, upTo)
 
   /** Ingest one embedding batch: sign ONLY the batch, find the verified
     * near-dup pairs it adds (batch-internal + batch×index — index×index
@@ -2150,62 +1809,10 @@ object IncrementalIndex {
     * signature rows as the next version. Returns (version, pairs (a, b,
     * cos) with a < b), pairs persisted + materialized, caller unpersists.
     */
-  private final case class SrpArtifacts(
-      batchSigs: DataFrame, batchStats: DataFrame, verified: DataFrame,
-      release: () => Unit)
-
-  private def srpBatchArtifacts(spark: SparkSession, root: String,
-      batch: DataFrame, idCol: String, vecCol: String,
-      p: SrpParams, excludeEpoch: Option[Long] = None): SrpArtifacts = {
-    val batchSigs = srpSignatures(batch, idCol, vecCol, p).persist()
-    try {
-      val haveIndex = VersionedTable.versions(spark, root).nonEmpty
-      val prior = if (haveIndex) Some(readSrpIndex(spark, root)) else None
-      val bandedB = bandedOfSrp(batchSigs.select("id", "p", "sig")).persist()
-      // persisted: the stats delta otherwise executes twice per ingest
-      // (the over-cap collect job + the sidecar write) — see the
-      // minHashBatchArtifacts note / JobProfile d56
-      val batchStats = bucketStats(bandedB).persist()
-      val statsRoot = subRoot(root, "bucketstats")
-      // one job: materializes, collects over-cap list + gate row count
-      val (over, batchRows) = overCapAndBatchRows(spark, statsRoot,
-        batchStats, p.bucketCap, excludeEpoch)
-      val cands = (prior match {
-        case Some(ix) => incrementalBucketCandidates(
-          bandedOfSrp(ix.select(col("id"), col("p"), col("sig"))),
-          bandedB, p.bucketCap, over, batchRows, p.broadcastRowLimit)
-        case None => incrementalBucketCandidates(
-          bandedB.filter(lit(false)), bandedB, p.bucketCap, over,
-          batchRows, p.broadcastRowLimit)
-      }).persist()
-      try {
-        val vecs = prior match {
-          case Some(ix) => ix.select(col("id"), col("v"))
-            .unionAll(batchSigs.select("id", "v"))
-          case None => batchSigs.select("id", "v")
-        }
-        val verified = Dedup.verifyCosine(cands, vecs, p.threshold,
-          broadcastSides = Dedup.sidesBroadcastable(cands, p.broadcastRowLimit))
-        SrpArtifacts(batchSigs, batchStats, verified, () => {
-          batchStats.unpersist(blocking = false)
-          bandedB.unpersist(blocking = false)
-          batchSigs.unpersist(blocking = false)
-        })
-      } finally cands.unpersist(blocking = false)
-    } catch {
-      case t: Throwable => batchSigs.unpersist(blocking = false); throw t
-    }
-  }
-
   def ingestEmbeddings(spark: SparkSession, root: String, batch: DataFrame,
-      idCol: String, vecCol: String, p: SrpParams): (Long, DataFrame) = {
-    val a = srpBatchArtifacts(spark, root, batch, idCol, vecCol, p)
-    try {
-      VersionedTable.write(spark, a.batchStats, subRoot(root, "bucketstats")) // stats first (see ingestMinHash)
-      val v = VersionedTable.write(spark, a.batchSigs, root)
-      (v, a.verified)
-    } finally a.release()
-  }
+      idCol: String, vecCol: String, p: SrpParams): (Long, DataFrame) =
+    ingestSigs(spark, root, srpSignatures(batch, idCol, vecCol, p),
+      srpFamily(p), None).get
 
   /** Exactly-once streaming embedding ingest — [[ingestMinHashEpoch]]'s
     * protocol over the SRP artifacts (a live embedding feed is the
@@ -2214,36 +1821,26 @@ object IncrementalIndex {
     */
   def ingestEmbeddingsEpoch(spark: SparkSession, root: String,
       pairsRoot: String, batch: DataFrame, idCol: String, vecCol: String,
-      epochId: Long, p: SrpParams): Option[DataFrame] = {
-    if (epochCommittedIn(spark, root, epochId)) return None
-    val a = srpBatchArtifacts(spark, root, batch, idCol, vecCol, p,
-      excludeEpoch = Some(epochId))
-    try {
-      commitEpoch(spark, epochId,
-        Some((a.batchStats, subRoot(root, "bucketstats"))),
-        Seq(a.verified -> pairsRoot, a.batchSigs -> root))
-      Some(a.verified)
-    } catch {
-      case t: Throwable => a.verified.unpersist(blocking = false); throw t
-    } finally a.release()
-  }
+      epochId: Long, p: SrpParams): Option[DataFrame] =
+    ingestSigs(spark, root, srpSignatures(batch, idCol, vecCol, p),
+      srpFamily(p), Some((epochId, pairsRoot))).map(_._2)
 
   /** Merge an independently-built SRP embedding index into `root` —
-    * the [[mergeMinHashIndexes]] shape over the SRP machinery. SOUND
-    * ONLY when both shards froze IDENTICAL geometry (same `SrpParams`
-    * seed/dim/bits — deterministic in the params, which is how a
-    * sharded provisioning constructs them): stored signatures then live
-    * in the same bucket space and banding collisions match a one-shot
-    * build. Cross pairs verified by exact cosine over the STORED
-    * vectors (the SRP log keeps `v` for verification, which is what
-    * makes this merge possible from logs alone — IVF/PQ logs keep only
-    * assignments/codes, so those families re-ingest instead of
-    * merging). Data move is log adoption. Accumulated pairs equal the
-    * one-shot over the union (the e25 gate).
+    * the [[mergeMinHashIndexes]] shape over the SRP machinery, and the
+    * N-way merge with one donor. SOUND ONLY when both shards froze
+    * IDENTICAL geometry (same `SrpParams` seed/dim/bits — deterministic
+    * in the params, which is how a sharded provisioning constructs
+    * them): stored signatures then live in the same bucket space and
+    * banding collisions match a one-shot build. Cross pairs verified by
+    * exact cosine over the STORED vectors (the SRP log keeps `v` for
+    * verification, which is what makes this merge possible from logs
+    * alone — IVF/PQ logs keep only assignments/codes, so those families
+    * re-ingest instead of merging). Data move is log adoption.
+    * Accumulated pairs equal the one-shot over the union (the e25 gate).
     */
   def mergeSrpIndexes(spark: SparkSession, root: String,
       donorRoot: String, p: SrpParams): (Long, DataFrame) =
-    mergeSrpImpl(spark, root, donorRoot, p, None).get
+    mergeManySrpIndexes(spark, root, Seq(donorRoot), p)
 
   /** Exactly-once SRP shard merge — the [[mergeMinHashIndexesEpoch]]
     * protocol (tombstones → stats → pairs → signatures, signatures the
@@ -2252,69 +1849,20 @@ object IncrementalIndex {
   def mergeSrpIndexesEpoch(spark: SparkSession, root: String,
       pairsRoot: String, donorRoot: String, epochId: Long,
       p: SrpParams): Option[(Long, DataFrame)] =
-    mergeSrpImpl(spark, root, donorRoot, p, Some((epochId, pairsRoot)))
-
-  private def mergeSrpImpl(spark: SparkSession, root: String,
-      donorRoot: String, p: SrpParams,
-      epoch: Option[(Long, String)]): Option[(Long, DataFrame)] = {
-    if (epoch.exists { case (e, _) => epochCommittedIn(spark, root, e) })
-      return None
-    // no full-width log cache: `v` (the embedding) dominates the row —
-    // banding reads the narrow (id, p, sig) slice, verification a
-    // candidate-pruned (id, v) slice, both column-pruned parquet scans
-    val donor = readSrpIndex(spark, donorRoot)
-    val index = readSrpIndex(spark, root)
-    val bandedD = bandedOfSrp(donor.select("id", "p", "sig")).persist()
-    try {
-      val statsRoot = subRoot(root, "bucketstats")
-      // one job: materializes, collects over-cap list + gate row count
-      val (over, donorRows) = overCapAndBatchRows(spark, statsRoot,
-        bucketStats(bandedD), p.bucketCap, epoch.map(_._1))
-      // crossOnly (see mergeMinHashIndexes): donor-internal candidates
-      // never generate, and disjoint shard ids make every candidate
-      // index×donor by construction — no membership probe
-      val cands = incrementalBucketCandidates(
-        bandedOfSrp(index.select("id", "p", "sig")), bandedD, p.bucketCap,
-        over, donorRows, p.broadcastRowLimit, crossOnly = true).persist()
-      try {
-        val vecs = index.select(col("id"), col("v"))
-          .unionAll(donor.select(col("id"), col("v")))
-        val verified = Dedup.verifyCosine(cands, vecs, p.threshold,
-          broadcastSides = Dedup.sidesBroadcastable(cands, p.broadcastRowLimit))
-        val donorTombs = VersionedTable.liveVersionDirs(
-          spark, subRoot(donorRoot, "tombstones"))
-        val donorStatsDirs = VersionedTable.liveVersionDirs(
-          spark, subRoot(donorRoot, "bucketstats"))
-        val donorSigDirs = VersionedTable.liveVersionDirs(spark, donorRoot)
-        val v = epoch match {
-          case None =>
-            if (donorTombs.nonEmpty)
-              VersionedTable.adoptFiles(spark, subRoot(root, "tombstones"), donorTombs)
-            VersionedTable.adoptFiles(spark, statsRoot, donorStatsDirs)
-            VersionedTable.adoptFiles(spark, root, donorSigDirs)
-          case Some((e, pairsRoot)) =>
-            if (donorTombs.nonEmpty)
-              adoptEpochLeg(spark, subRoot(root, "tombstones"), donorTombs, e)
-            adoptEpochLeg(spark, statsRoot, donorStatsDirs, e)
-            writeEpochLeg(spark, verified, pairsRoot, e)
-            adoptEpochLeg(spark, root, donorSigDirs, e)
-        }
-        Some((v, verified))
-      } finally cands.unpersist(blocking = false)
-    } finally bandedD.unpersist(blocking = false)
-  }
+    mergeManySrpIndexesEpoch(spark, root, pairsRoot, Seq(donorRoot), epochId, p)
 
   /** N-WAY SRP shard merge — the [[mergeManyMinHashIndexes]] fan-in
-    * over the SRP machinery. SOUND iff every shard froze IDENTICAL
-    * `SrpParams` (the binary merge's contract, N-fold): same
-    * hyperplanes ⇒ same buckets ⇒ the tagged donor union's candidates
-    * are complete; possible from logs alone because the SRP log stores
-    * its verify vectors. Gate: d74 == e21's exact cosine oracle with a
-    * mod-3 split that puts every perturbed-twin pair cross-shard.
+    * over the SRP machinery ([[mergeShards]]). SOUND iff every shard
+    * froze IDENTICAL `SrpParams` (the binary merge's contract, N-fold):
+    * same hyperplanes ⇒ same buckets ⇒ the tagged donor union's
+    * candidates are complete; possible from logs alone because the SRP
+    * log stores its verify vectors. Gate: d74 == e21's exact cosine
+    * oracle with a mod-3 split that puts every perturbed-twin pair
+    * cross-shard.
     */
   def mergeManySrpIndexes(spark: SparkSession, root: String,
       donorRoots: Seq[String], p: SrpParams): (Long, DataFrame) =
-    mergeManySrpImpl(spark, root, donorRoots, p, None).get
+    mergeShards(spark, root, donorRoots, srpFamily(p), None).get
 
   /** Exactly-once N-way SRP merge (one orchestrator-owned epoch id for
     * the whole fan-in step).
@@ -2322,58 +1870,7 @@ object IncrementalIndex {
   def mergeManySrpIndexesEpoch(spark: SparkSession, root: String,
       pairsRoot: String, donorRoots: Seq[String], epochId: Long,
       p: SrpParams): Option[(Long, DataFrame)] =
-    mergeManySrpImpl(spark, root, donorRoots, p, Some((epochId, pairsRoot)))
-
-  private def mergeManySrpImpl(spark: SparkSession, root: String,
-      donorRoots: Seq[String], p: SrpParams,
-      epoch: Option[(Long, String)]): Option[(Long, DataFrame)] = {
-    require(donorRoots.nonEmpty, "mergeManySrpIndexes needs donors")
-    if (epoch.exists { case (e, _) => epochCommittedIn(spark, root, e) })
-      return None
-    // no full-width log cache (the binary merge's reasoning): banding
-    // reads the narrow (id, p, sig) slice, verification a
-    // candidate-pruned (id, v) slice
-    val donors = donorRoots.map(readSrpIndex(spark, _))
-    val index = readSrpIndex(spark, root)
-    val bandedD = donors.zipWithIndex.map { case (d, i) =>
-      bandedOfSrp(d.select("id", "p", "sig")).withColumn("sh", lit(i + 1))
-    }.reduce(_.unionAll(_)).persist()
-    try {
-      val statsRoot = subRoot(root, "bucketstats")
-      // one job: materializes, collects over-cap list + gate row count
-      val (over, donorRows) = overCapAndBatchRows(spark, statsRoot,
-        bucketStats(bandedD), p.bucketCap, epoch.map(_._1))
-      val cands = incrementalBucketCandidates(
-        bandedOfSrp(index.select("id", "p", "sig")), bandedD, p.bucketCap,
-        over, donorRows, p.broadcastRowLimit, batchSharded = true).persist()
-      try {
-        val vecs = (index +: donors).map(_.select(col("id"), col("v")))
-          .reduce(_.unionAll(_))
-        val verified = Dedup.verifyCosine(cands, vecs, p.threshold,
-          broadcastSides = Dedup.sidesBroadcastable(cands, p.broadcastRowLimit))
-        val allTombs = donorRoots.flatMap(dr =>
-          VersionedTable.liveVersionDirs(spark, subRoot(dr, "tombstones")))
-        val allStats = donorRoots.flatMap(dr =>
-          VersionedTable.liveVersionDirs(spark, subRoot(dr, "bucketstats")))
-        val allSigs = donorRoots.flatMap(dr =>
-          VersionedTable.liveVersionDirs(spark, dr))
-        val v = epoch match {
-          case None =>
-            if (allTombs.nonEmpty)
-              VersionedTable.adoptFiles(spark, subRoot(root, "tombstones"), allTombs)
-            VersionedTable.adoptFiles(spark, statsRoot, allStats)
-            VersionedTable.adoptFiles(spark, root, allSigs)
-          case Some((e, pairsRoot)) =>
-            if (allTombs.nonEmpty)
-              adoptEpochLeg(spark, subRoot(root, "tombstones"), allTombs, e)
-            adoptEpochLeg(spark, statsRoot, allStats, e)
-            writeEpochLeg(spark, verified, pairsRoot, e)
-            adoptEpochLeg(spark, root, allSigs, e)
-        }
-        Some((v, verified))
-      } finally cands.unpersist(blocking = false)
-    } finally bandedD.unpersist(blocking = false)
-  }
+    mergeShards(spark, root, donorRoots, srpFamily(p), Some((epochId, pairsRoot)))
 
   // ------------------------------------------------------------- SemDeDup
 
@@ -2440,39 +1937,29 @@ object IncrementalIndex {
     * precheck is the deterministic gate and the count stays as the
     * ingest-path telemetry. Gate: e27 — adopter(b1) + merge(donor built
     * on b2) equals e22's bootstrap+ingest oracle verbatim, because the
-    * donor's member log presents exactly b2's (id, v) rows.
+    * donor's member log presents exactly b2's (id, v) rows. The N-way
+    * merge with one donor.
     */
   def mergeSemDedupIndexes(spark: SparkSession, root: String,
       donorRoot: String, threshold: Double, cap: Int = 512,
-      broadcastRowLimit: Long = DefaultBroadcastRowLimit): SemDedupIngest = {
-    val donor = VersionedTable.readAllVersions(spark, semMembersRoot(donorRoot))
-      .select("id", "v")
-    requireIdRangeSharded(spark, root, Seq(donor))
-    ingestSemDedup(spark, root, donor, "id", "v",
-      threshold, cap, broadcastRowLimit)
-  }
+      broadcastRowLimit: Long = DefaultBroadcastRowLimit): SemDedupIngest =
+    mergeManySemDedupIndexes(spark, root, Seq(donorRoot), threshold, cap,
+      broadcastRowLimit)
 
   /** Exactly-once SemDeDup shard merge — [[ingestSemDedupEpoch]] with
     * the donor's member log playing the batch role (orchestrator-owned
     * monotone `epochId`; parameter order follows the family convention,
-    * epochId immediately after donorRoot). Same enforced id-range
-    * contract as [[mergeSemDedupIndexes]], checked after the replay
-    * guard and before any leg commits.
+    * epochId immediately after donorRoot). The N-way merge with one
+    * donor: the replay guard runs before the donor is touched, then the
+    * same enforced id-range contract as [[mergeSemDedupIndexes]], before
+    * any leg commits.
     */
   def mergeSemDedupIndexesEpoch(spark: SparkSession, root: String,
       verdictsRoot: String, donorRoot: String, epochId: Long,
       threshold: Double, cap: Int = 512,
-      broadcastRowLimit: Long = DefaultBroadcastRowLimit): Option[SemDedupIngest] = {
-    // replay guard BEFORE touching the donor (the mergeMinHashImpl
-    // ordering): a redelivery after the donor shard was torn down must
-    // still no-op instead of crashing on the missing member log
-    if (epochCommittedIn(spark, semMembersRoot(root), epochId)) return None
-    val donor = VersionedTable.readAllVersions(spark, semMembersRoot(donorRoot))
-      .select("id", "v")
-    requireIdRangeSharded(spark, root, Seq(donor))
-    ingestSemDedupEpoch(spark, root, verdictsRoot, donor,
-      "id", "v", threshold, epochId, cap, broadcastRowLimit)
-  }
+      broadcastRowLimit: Long = DefaultBroadcastRowLimit): Option[SemDedupIngest] =
+    mergeManySemDedupIndexesEpoch(spark, root, verdictsRoot, Seq(donorRoot),
+      epochId, threshold, cap, broadcastRowLimit)
 
   /** N-WAY SemDeDup shard merge — the ORDERED fan-in the id-range
     * contract makes natural: k donors whose ranges are pairwise
@@ -2499,7 +1986,7 @@ object IncrementalIndex {
 
   /** Exactly-once N-way SemDeDup merge — [[mergeManySemDedupIndexes]]
     * under the epoch protocol: replay guard first (a redelivery after
-    * the donor shards were torn down must no-op, the mergeMinHashImpl
+    * the donor shards were torn down must no-op, the mergeShards
     * ordering), then the range precheck, then ONE
     * [[ingestSemDedupEpoch]]. Returns None on a fully-replayed epoch.
     */
@@ -2623,18 +2110,14 @@ object IncrementalIndex {
       val bandedB = banded(assigned).persist()
       // persisted: the stats delta otherwise executes twice per ingest
       // (the over-cap collect job + the sidecar write) — see the
-      // minHashBatchArtifacts note / JobProfile d56
+      // batchArtifacts note / JobProfile d56
       val batchStats = bucketStats(bandedB).persist()
       // one job: materializes, collects over-cap list + gate row count
       val (over, batchRows) = overCapAndBatchRows(spark,
         subRoot(root, "cellstats"), batchStats, cap, excludeEpoch)
-      val cands = (prior match {
-        case Some(ix) => incrementalBucketCandidates(
-          banded(ix), bandedB, cap, over, batchRows, broadcastRowLimit)
-        case None => incrementalBucketCandidates(
-          bandedB.filter(lit(false)), bandedB, cap, over,
-          batchRows, broadcastRowLimit)
-      }).persist()
+      val cands = incrementalBucketCandidates(
+        prior.map(banded).getOrElse(bandedB.filter(lit(false))), bandedB,
+        cap, over, batchRows, broadcastRowLimit, donors = 0).persist()
       try {
         // each side tagged with batch membership: the verify pass then
         // carries `bInBatch` per pair, and every post-verify derivation
@@ -3003,41 +2486,17 @@ object IncrementalIndex {
     }
   }
 
-  /** Purge a MinHash dedup index: checkpoint the surviving signature
-    * rows, re-derive the `bucketstats` sidecar EXACTLY from them (one
-    * map-only banding pass + a bucket-bounded aggregate — the occupancy
-    * overcount retraction left behind disappears), then clear the
-    * tombstones. Crash-safe in that order: signatures first (tombstones
-    * still filter), stats next (overcounting until then — conservative),
-    * tombstones last.
+  /** Purge a MinHash dedup index ([[purgeSigIndex]]): surviving
+    * signatures checkpointed, `bucketstats` re-derived exactly from them,
+    * tombstones cleared last.
     */
   def purgeDedupIndex(spark: SparkSession, root: String,
-      p: MinHashParams = MinHashParams()): Unit = {
-    purgeLog(spark, root, root)
-    val statsRoot = subRoot(root, "bucketstats")
-    VersionedTable.writeCheckpoint(spark,
-      bucketStats(bandedOf(
-        VersionedTable.readAllVersions(spark, root)
-          .select(col("id"), col("sz"), col("sig")), p.numHashes, p.bands)),
-      statsRoot, VersionedTable.versions(spark, statsRoot).last)
-    VersionedTable.vacuumCovered(spark, statsRoot)
-    clearTombstones(spark, root)
-  }
+      p: MinHashParams = MinHashParams()): Unit =
+    purgeSigIndex(spark, root, bandedOf(_, p.numHashes, p.bands))
 
-  /** Purge an SRP embedding index — same shape as [[purgeDedupIndex]]:
-    * surviving signatures checkpointed, `bucketstats` re-derived exactly
-    * from them, tombstones cleared last.
-    */
-  def purgeSrpIndex(spark: SparkSession, root: String): Unit = {
-    purgeLog(spark, root, root)
-    val statsRoot = subRoot(root, "bucketstats")
-    VersionedTable.writeCheckpoint(spark,
-      bucketStats(bandedOfSrp(
-        VersionedTable.readAllVersions(spark, root).select("id", "p", "sig"))),
-      statsRoot, VersionedTable.versions(spark, statsRoot).last)
-    VersionedTable.vacuumCovered(spark, statsRoot)
-    clearTombstones(spark, root)
-  }
+  /** Purge an SRP embedding index — same shape as [[purgeDedupIndex]]. */
+  def purgeSrpIndex(spark: SparkSession, root: String): Unit =
+    purgeSigIndex(spark, root, bandedOfSrp)
 
   /** Purge a TF-IDF index's weight + norm logs (frozen stats untouched —
     * the IDF snapshot is corpus metadata, not per-doc state).
@@ -3451,9 +2910,9 @@ object IncrementalIndex {
     v
   }
 
-  /** Compact a MinHash or SRP signature index: one checkpoint for the
-    * signature table (rows verbatim) and one for the `bucketstats`
-    * sidecar, PRE-AGGREGATED — the per-ingest over-cap probe then reads
+  /** Compact a MinHash, SimHash (text or image-hash) or SRP signature
+    * index: one checkpoint for the signature table (rows verbatim) and
+    * one for the `bucketstats` sidecar, PRE-AGGREGATED — the per-ingest over-cap probe then reads
     * one (band, bucket, n) row per bucket instead of re-summing every
     * delta ever written (the O(ingests) term this call exists to kill;
     * N daily ingests otherwise mean N tiny parquet versions forever).
@@ -3461,7 +2920,7 @@ object IncrementalIndex {
   def compactDedupIndex(spark: SparkSession, root: String,
       vacuum: Boolean = true): Unit = {
     compactLog(spark, root, vacuum = vacuum)
-    compactLog(spark, subRoot(root, "bucketstats"),
+    compactLog(spark, statsRootOf(root),
       _.groupBy("band", "bucket").agg(sum(col("n")).as("n")), vacuum)
   }
 

@@ -49,8 +49,10 @@ class EpochMergeSpec extends SparkSpec {
     import spark.implicits._
     // a 12-member identical-text mega-clique (every band-bucket over cap
     // 4) split ACROSS shards, plus unrelated filler — this drives the
-    // merge's over-cap rank-chunk path, where crossOnly/batchSharded
-    // filter by tag difference instead of the ingest's new-flag
+    // merge's over-cap rank-chunk path, where a merge of any donor count
+    // (a binary merge is the N-way merge with one donor, whose donor
+    // self-join still never runs) keeps pairs by shard-tag difference
+    // instead of the ingest's new-flag
     val boiler = (0L until 12L).map(i =>
       (i, "terms of service apply to all content provided herein always"))
     val filler = (100L until 160L).map(i =>
@@ -78,7 +80,7 @@ class EpochMergeSpec extends SparkSpec {
     assert(connected(pairSet(pA) ++ pairSet(pB) ++ sX),
       "binary merge under engaged caps must keep the clique one component")
     Seq(pA, pB, cross).foreach(_.unpersist(blocking = false))
-    // n-way: mod-3 shards through the batchSharded over-cap path
+    // n-way: mod-3 shards through the cross-shard over-cap path
     val roots = (0 to 2).map(i => tmpDir(s"capn_$i"))
     val shardPairs = (0 to 2).map { i =>
       val (_, pp) = IncrementalIndex.ingestMinHash(

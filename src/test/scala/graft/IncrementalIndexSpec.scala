@@ -254,6 +254,63 @@ class IncrementalIndexSpec extends SparkSpec {
     assert(pairSet(es1) == pairSet(eb1) && pairSet(es2) == pairSet(eb2))
     assert(pairSet(eb1).nonEmpty && pairSet(eb2).nonEmpty)
     Seq(eb1, eb2, es1, es2).foreach(_.unpersist())
+    // shard merges, binary and N-way, of every banded family: the same
+    // limit drops both the candidate and the verify-side broadcasts. The
+    // size-based auto-broadcast is off for the fallback runs, so any
+    // broadcast left in the verified frame's cached plan is an ungated hint.
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    def shards(prefix: String, ingest: (String, DataFrame) => Unit,
+        parts: Seq[DataFrame]): Seq[String] = parts.zipWithIndex.map { case (b, i) =>
+      val rt = tmpDir(s"${prefix}_s$i"); ingest(rt, b); rt
+    }
+    def checkMerges(family: String, shardRoots: Seq[String],
+        merge: (String, Seq[String], Long) => DataFrame): Unit =
+      for (donors <- Seq(shardRoots.slice(1, 2), shardRoots.drop(1))) {
+        def run(limit: Long): DataFrame = {
+          val adopter = tmpDir(s"incr_fallback_${family}_adopter")
+          org.apache.commons.io.FileUtils.copyDirectory(
+            new java.io.File(shardRoots.head), new java.io.File(adopter))
+          merge(adopter, donors, limit)
+        }
+        val viaBroadcast = run(IncrementalIndex.DefaultBroadcastRowLimit)
+        val confs = Seq("spark.sql.autoBroadcastJoinThreshold",
+          "spark.sql.adaptive.autoBroadcastJoinThreshold")
+        confs.foreach(spark.conf.set(_, "-1"))
+        val viaShuffle = try run(0L) finally confs.foreach(spark.conf.unset)
+        val what = s"$family merge of ${donors.size} donor(s)"
+        assert(pairSet(viaShuffle) == pairSet(viaBroadcast) && pairSet(viaBroadcast).nonEmpty,
+          s"$what: fallback pairs must match")
+        val broadcasts = planNodes(viaShuffle.queryExecution.executedPlan)
+          .collect { case b: BroadcastExchangeExec => b }
+        assert(broadcasts.isEmpty, s"$what broadcasts over the limit: $broadcasts")
+        Seq(viaBroadcast, viaShuffle).foreach(_.unpersist())
+      }
+    val byShard = (0 to 2).map(i => corpus.filter(pmod(col("doc_id"), lit(3)) === i))
+    checkMerges("minhash",
+      shards("incr_fallback_mh", (rt, b) =>
+        IncrementalIndex.ingestMinHash(spark, rt, b, "doc_id", "text")._2.unpersist(), byShard),
+      (rt, donors, limit) => {
+        val p = IncrementalIndex.MinHashParams(broadcastRowLimit = limit)
+        if (donors.size == 1) IncrementalIndex.mergeMinHashIndexes(spark, rt, donors.head, p)._2
+        else IncrementalIndex.mergeManyMinHashIndexes(spark, rt, donors, p)._2
+      })
+    checkMerges("simhash",
+      shards("incr_fallback_sim", (rt, b) =>
+        IncrementalIndex.ingestSimHash(spark, rt, b, "doc_id", "text")._2.unpersist(), byShard),
+      (rt, donors, limit) => {
+        if (donors.size == 1)
+          IncrementalIndex.mergeSimHashIndexes(spark, rt, donors.head, broadcastRowLimit = limit)._2
+        else IncrementalIndex.mergeManySimHashIndexes(spark, rt, donors, broadcastRowLimit = limit)._2
+      })
+    checkMerges("srp",
+      shards("incr_fallback_srp", (rt, b) =>
+        IncrementalIndex.ingestEmbeddings(spark, rt, b, "vec_id", "v", srpB)._2.unpersist(),
+        (0 to 2).map(i => ec.filter(pmod(col("vec_id"), lit(3)) === i))),
+      (rt, donors, limit) => {
+        val p = srpB.copy(broadcastRowLimit = limit)
+        if (donors.size == 1) IncrementalIndex.mergeSrpIndexes(spark, rt, donors.head, p)._2
+        else IncrementalIndex.mergeManySrpIndexes(spark, rt, donors, p)._2
+      })
   }
 
   test("out-of-order SemDeDup arrival is counted, never flips an indexed verdict") {
@@ -790,6 +847,46 @@ class IncrementalIndexSpec extends SparkSpec {
     assert(statsSum == survivorBanded,
       s"stats must count exactly the surviving banded rows ($statsSum vs $survivorBanded)")
     Seq(p3, t3).foreach(_.unpersist())
+  }
+
+  test("purge of every banded family: stats equal a fresh build over the survivors, so do later ingests") {
+    val r = pmod(col("doc_id") % 100000, lit(3))
+    val isMut = col("doc_id") >= 100000
+    val b1 = corpus.filter((!isMut && r < 2) || (isMut && r === 0))
+    val b2 = corpus.filter((!isMut && r === 2) || (isMut && r > 0))
+    val gone = corpus.filter(!isMut && r === 1 && col("doc_id") % 2 === 0).select("doc_id")
+    val embs = spark.read.parquet(sf("embeddings"))
+      .select(col("vec_id"), expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
+    val mut = embs.select((col("vec_id") + 100000).as("vec_id"),
+      expr("transform(v, (x, i) -> IF(i = 0, x + 0.01D, x))").as("v"))
+    val srp = IncrementalIndex.SrpParams(dim = 64, bitsPerTable = 8, bucketCap = 256)
+    def occ(rt: String) = VersionedTable.readAllVersions(spark, s"$rt/bucketstats")
+      .groupBy("band", "bucket").agg(sum(col("n")).as("n"))
+      .collect().map(_.toSeq).toSet
+    def check(family: String, idCol: String, first: DataFrame, next: DataFrame,
+        retracted: DataFrame, ingest: (String, DataFrame) => DataFrame,
+        purge: String => Unit): Unit = {
+      val root = tmpDir(s"purge_${family}"); val fresh = tmpDir(s"purge_${family}_fresh")
+      ingest(root, first).unpersist()
+      IncrementalIndex.retract(spark, root, retracted, idCol)
+      purge(root)
+      ingest(fresh, first.join(retracted, Seq(idCol), "left_anti")).unpersist()
+      assert(occ(root) == occ(fresh),
+        s"$family: purged occupancy must equal a fresh build over the survivors")
+      val (pr, pf) = (ingest(root, next), ingest(fresh, next))
+      assert(pairSet(pr) == pairSet(pf) && pairSet(pf).nonEmpty,
+        s"$family: a post-purge ingest must equal the fresh build's")
+      Seq(pr, pf).foreach(_.unpersist())
+    }
+    check("minhash", "doc_id", b1, b2, gone,
+      IncrementalIndex.ingestMinHash(spark, _, _, "doc_id", "text")._2,
+      IncrementalIndex.purgeDedupIndex(spark, _))
+    check("simhash", "doc_id", b1, b2, gone,
+      IncrementalIndex.ingestSimHash(spark, _, _, "doc_id", "text")._2,
+      IncrementalIndex.purgeSimHashIndex(spark, _))
+    check("srp", "vec_id", embs, mut, embs.filter(col("vec_id") % 2 === 0).select("vec_id"),
+      IncrementalIndex.ingestEmbeddings(spark, _, _, "vec_id", "v", srp)._2,
+      IncrementalIndex.purgeSrpIndex(spark, _))
   }
 
   test("minhash shard merge: union complete, cross-only, merged index ingests like one-shot") {

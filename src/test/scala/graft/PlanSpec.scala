@@ -479,4 +479,55 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("v00000001"), p)
     assert(!p.contains("v00000002"), p)
   }
+
+  test("one-donor shard merge: no join pairs donor-banded rows with donor-banded rows") {
+    // A binary merge is the N-way merge with one donor. Its donor's
+    // internal pairs are already in the donor's pair log, so the
+    // candidate plan must never join the (persisted) donor-banded rows
+    // with themselves — the index-sized self-join the binary merge
+    // exists to skip. The two-donor merge is the positive control: its
+    // cross-shard donor join is exactly such a join.
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import graft.operators.IncrementalIndex
+    val docs = spark.read.parquet(sf("documents")).select(col("doc_id"), col("text"))
+    val corpus = docs.union(docs.select((col("doc_id") + 100000).as("doc_id"),
+      expr("substring(text, instr(text, ' ') + 1)").as("text")))
+    def shard(i: Int) = {
+      val rt = tmpDir(s"plan_merge_s$i")
+      IncrementalIndex.ingestMinHash(spark, rt,
+        corpus.filter(pmod(col("doc_id"), lit(3)) === i % 3), "doc_id", "text")._2.unpersist()
+      rt
+    }
+    val Seq(a0, a1, s1, s2) = Seq(0, 0, 1, 2).map(shard)
+    // the candidate pair list is the persisted (a, b) frame the verify
+    // pass scans; its cached plan is the candidate-generation plan
+    def candidatePlan(verified: DataFrame): SparkPlan =
+      planNodes(verified.queryExecution.executedPlan).collectFirst {
+        case m: InMemoryTableScanExec if m.output.map(_.name) == Seq("a", "b") =>
+          m.relation.cachedPlan
+      }.getOrElse(fail("no cached candidate list under the verified pairs"))
+    def readsOnlyCaches(side: SparkPlan): Boolean = {
+      val leaves = planNodes(side, intoCaches = false).filter {
+        case _: AdaptiveSparkPlanExec | _: QueryStageExec | _: ReusedExchangeExec => false
+        case n => n.children.isEmpty
+      }
+      leaves.nonEmpty && leaves.forall(_.isInstanceOf[InMemoryTableScanExec])
+    }
+    def donorSelfJoins(verified: DataFrame) =
+      planNodes(candidatePlan(verified), intoCaches = false).collect {
+        case j: BaseJoinExec if readsOnlyCaches(j.left) && readsOnlyCaches(j.right) => j
+      }
+    val (_, one) = IncrementalIndex.mergeMinHashIndexes(spark, a0, s1)
+    val (_, two) = IncrementalIndex.mergeManyMinHashIndexes(spark, a1, Seq(s1, s2))
+    assert(donorSelfJoins(two).nonEmpty,
+      "control: the two-donor merge joins donor rows across shards")
+    assert(donorSelfJoins(one).isEmpty,
+      s"the one-donor merge planned a donor self-join: ${donorSelfJoins(one)}")
+    Seq(one, two).foreach(_.unpersist())
+  }
 }

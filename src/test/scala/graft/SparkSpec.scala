@@ -11,6 +11,26 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** Every node of an executed physical plan, looking through adaptive
+    * wrappers, query stages and reused exchanges; with `intoCaches`, also
+    * through the plan that filled each in-memory scan's cache (a scan of
+    * a persisted frame is otherwise a leaf).
+    */
+  def planNodes(plan: org.apache.spark.sql.execution.SparkPlan,
+      intoCaches: Boolean = true): Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    plan +: (plan match {
+      case a: AdaptiveSparkPlanExec => planNodes(a.executedPlan, intoCaches)
+      case q: QueryStageExec => planNodes(q.plan, intoCaches)
+      case r: ReusedExchangeExec => planNodes(r.child, intoCaches)
+      case m: InMemoryTableScanExec =>
+        if (intoCaches) planNodes(m.relation.cachedPlan, intoCaches) else Nil
+      case o => o.children.flatMap(planNodes(_, intoCaches))
+    })
+  }
 }
 
 object SparkSpec {
